@@ -1,39 +1,59 @@
-"""Registry of DataFrames the engine has persisted on a user's behalf.
+"""Registry of the persists and local checkpoints the engine makes on a
+user's behalf.
 
-Several operators persist intermediates for correctness or to stop
-Catalyst re-inlining an expensive subtree (two-phase rank's partition
-ids must be identical across two passes; LSH/minhash candidate tables
-self-join a derived hash column; the corpus pipeline fans one survivor
-set out to three consumers).  Those caches are deliberately
-session-lived — but a long-running embedder that loops over corpora
-needs a way to release them that does NOT also evict the user's own
+Several operators persist or checkpoint intermediates: LSH/minhash
+candidate tables self-join a derived hash column, the two-phase rank
+freezes its partition tagging, iterative graph and suffix-array loops
+truncate lineage every round.  A long-running embedder that loops over
+corpora needs a way to free them that does NOT also evict the user's own
 ``df.cache()`` data the way ``spark.catalog.clearCache()`` would.
 
-Every engine-side ``persist()`` is therefore routed through
-:func:`hold`, and :func:`release` unpersists exactly the engine's
-holdings (strong references on purpose: the JVM-side cache outlives the
-Python object, so a weakref would orphan the very cache we need to
-free).  ``pigpen_spark.tuning.clear_engine_caches`` delegates here.
+Every engine-side ``persist()`` and ``localCheckpoint()`` is therefore
+registered through :func:`hold`, in ONE list.  :func:`release`
+(``pigpen_spark.tuning.clear_engine_caches``) frees all of it: persisted
+frames are unpersisted, checkpoint-backed frames have their blocks freed
+(``DataFrame.unpersist()`` is a no-op on them — the blocks belong to the
+RDD the checkpoint wraps, not to the CacheManager).  ``with scope():``
+frees exactly what the current thread registered inside the block — the
+lifetime of one round, one micro-batch, one operator call.  Strong
+references on purpose: the JVM-side storage outlives the Python object,
+so a weakref would orphan the very blocks we need to free.
+
+Contract: results never depend on a cache being hit or kept.  A released
+persist is recomputed from its plan.  A local checkpoint cannot be
+recomputed, so a returned frame that reads a freed engine checkpoint
+fails loudly ("Checkpoint block ... not found") — it is never silently
+re-ranked or re-tagged.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 _LOCK = threading.Lock()
-_HELD: list[DataFrame] = []
+#: (frame, is_checkpoint) — the kind is fixed when the frame is registered
+_HELD: list[tuple[DataFrame, bool]] = []
+_SCOPES = threading.local()
 
 
 def hold(df: DataFrame) -> DataFrame:
-    """Register an engine-persisted DataFrame for later :func:`release`.
+    """Register an engine-persisted or engine-checkpointed DataFrame for
+    :func:`release` and the innermost open :func:`scope` of this thread.
 
     Returns ``df`` so call sites can stay expression-shaped:
     ``cand = hold(sigs.join(...).persist())``.
     """
+    entry = (df, not df.is_cached)
     with _LOCK:
-        _HELD.append(df)
+        _HELD.append(entry)
+    stack = getattr(_SCOPES, "stack", None)
+    if stack:
+        stack[-1].append(df)
     return df
 
 
@@ -43,99 +63,76 @@ def persisted(df: DataFrame) -> DataFrame:
     return hold(df.persist())
 
 
+def checkpointed(df: DataFrame, eager: bool = True,
+                 level: StorageLevel | None = None) -> DataFrame:
+    """``localCheckpoint()`` + :func:`hold` in one step, shaped for
+    ``.transform(checkpointed, eager=False)``."""
+    return hold(df.localCheckpoint(eager=eager, storageLevel=level))
+
+
 def held_count() -> int:
     with _LOCK:
         return len(_HELD)
 
 
-def release() -> int:
-    """Unpersist every registered DataFrame; returns how many were held.
+def _free(entries: list[tuple[DataFrame, bool]]) -> None:
+    for df, ckpt in entries:
+        try:
+            if ckpt:
+                # the frame IS the checkpoint result: its analyzed plan
+                # is the LogicalRDD whose blocks hold the data
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            else:
+                df.unpersist()
+        except Exception:
+            pass  # session already stopped — nothing to release
 
-    Blocking=False (Spark's default): eviction happens asynchronously on
-    the JVM side, which is fine — correctness never depends on a cache
-    being *absent*.
-    """
+
+def _forget(frames: list[DataFrame]) -> list[tuple[DataFrame, bool]]:
+    """Drop ``frames`` from the registry; returns the entries still held."""
+    ids = {id(df) for df in frames}
+    with _LOCK:
+        gone = [e for e in _HELD if id(e[0]) in ids]
+        _HELD[:] = [e for e in _HELD if id(e[0]) not in ids]
+    return gone
+
+
+def release() -> int:
+    """Free every registered frame; returns how many were held.
+
+    Unpersist is non-blocking (Spark's default): eviction happens
+    asynchronously on the JVM side, which is fine — correctness never
+    depends on a cache being *absent*."""
     with _LOCK:
         held, _HELD[:] = _HELD[:], []
-    for df in held:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
+    _free(held)
     return len(held)
 
 
-def mark() -> int:
-    """Position marker for :func:`release_since` — take it BEFORE a
-    bounded piece of work whose engine persists should not outlive it."""
-    with _LOCK:
-        return len(_HELD)
+@contextmanager
+def scope() -> Iterator[None]:
+    """Free, on exit, everything this thread registers inside the block.
 
-
-# ---------------------------------------------------------------------------
-# localCheckpoint block tracking.  DataFrame.unpersist() is a NO-OP for a
-# checkpoint-backed frame: the blocks were persisted on the underlying RDD by
-# Dataset.checkpoint, not registered with the CacheManager, so freeing them
-# needs rdd.unpersist() on the LogicalRDD the checkpointed frame wraps.
-# Iterative operators (suffix array, LCP descent) produce O(log n)
-# corpus-sized checkpoints per call — without deterministic freeing they
-# accumulate until GC/ContextCleaner gets around to them (the 100x OOM
-# lesson, suffix.py).
-# ---------------------------------------------------------------------------
-
-_HELD_CKPT: list[DataFrame] = []
-
-
-def free_ckpt(df: DataFrame) -> bool:
-    """Immediately release the storage blocks behind a frame returned by
-    ``localCheckpoint`` (the frame must BE the checkpoint result — its
-    analyzed plan is the LogicalRDD — not a select over it).  After this
-    the frame's data is gone permanently (local checkpoints are not
-    recomputable); only call on tables provably dead."""
+    Scopes nest: an inner scope frees only its own holdings.  A frame
+    that must outlive the scope is materialized inside it (an eager
+    checkpoint) and registered after it exits.  Holdings a
+    :func:`release` already freed are skipped."""
+    if not hasattr(_SCOPES, "stack"):
+        _SCOPES.stack = []
+    mine: list[DataFrame] = []
+    _SCOPES.stack.append(mine)
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        return True
-    except Exception:
-        return False
+        yield
+    finally:
+        _SCOPES.stack.pop()
+        _free(_forget(mine))
 
 
-def hold_ckpt(df: DataFrame) -> DataFrame:
-    """Register a checkpoint-backed frame for a later scoped
-    :func:`release_ckpt_since` — the checkpoint twin of :func:`hold`."""
-    with _LOCK:
-        _HELD_CKPT.append(df)
-    return df
-
-
-def mark_ckpt() -> int:
-    with _LOCK:
-        return len(_HELD_CKPT)
-
-
-def release_ckpt_since(marker: int) -> int:
-    """Free the storage blocks of every checkpoint registered after
-    ``marker``.  The freed frames must not be referenced by any plan that
-    still runs — local checkpoints cannot be recomputed."""
-    with _LOCK:
-        held, _HELD_CKPT[marker:] = _HELD_CKPT[marker:], []
-    n = 0
-    for df in held:
-        if free_ckpt(df):
-            n += 1
-    return n
-
-
-def release_since(marker: int) -> int:
-    """Unpersist exactly the engine holdings registered after ``marker``
-    (scoped release for iterative operators: each prefix-doubling /
-    peeling round's intermediates die with the round, without touching
-    caches other operators still depend on the way :func:`release`
-    would).  Returns how many were released."""
-    with _LOCK:
-        held, _HELD[marker:] = _HELD[marker:], []
-    for df in held:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return len(held)
+def free_ckpt(df: DataFrame) -> None:
+    """Immediately free the storage blocks behind a frame returned by
+    ``localCheckpoint`` (the frame must BE the checkpoint result, not a
+    select over it) and drop it from the registry.  Local checkpoints are
+    not recomputable: only call on tables provably dead (the superseded
+    level of a descent or peeling loop)."""
+    _forget([df])
+    _free([(df, True)])

@@ -32,6 +32,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pigpen_spark import cache as _cache
+from pigpen_spark.cache import checkpointed as _checkpointed
 from pigpen_spark.cache import persisted as _persisted
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -601,7 +602,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     labels = (
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     prev_sum = object()  # sentinel ≠ any sum (incl. the empty-graph None)
     try:
@@ -613,8 +614,9 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             new_labels = (
                 labels.select("id", "label").union(msgs)
                 .groupBy("id").agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=True)
+                .transform(_checkpointed)
             )
+            _cache.free_ckpt(labels)
             cur_sum = new_labels.agg(
                 F.sum(F.col("label").cast("decimal(38,0)"))
             ).first()[0]
@@ -710,7 +712,7 @@ def dedup_clusters_star(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
         .union(slim.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                    .where(F.col("src") != F.col("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     isolated = slim.where(F.col("src") == F.col("dst")).select("src").distinct()
 
@@ -748,19 +750,19 @@ def dedup_clusters_star(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
     prev = edges
     cnt_prev = edges.count()
     for rounds in range(1, max_iter + 1):
-        nxt = small_star(large_star(prev)).localCheckpoint(eager=True)
+        nxt = small_star(large_star(prev)).transform(_checkpointed)
         # exact set-equality fixpoint: counts equal AND no row differs.
         # prev's count is last round's nxt count — carry it instead of
         # re-running the job (one count + one exceptAll probe per round).
         cnt_nxt = nxt.count()
-        if (cnt_nxt == cnt_prev
-                and nxt.exceptAll(prev).limit(1).count() == 0):
-            prev = nxt
+        done = (cnt_nxt == cnt_prev
+                and nxt.exceptAll(prev).limit(1).count() == 0)
+        _cache.free_ckpt(prev)  # superseded round: its blocks die now
+        prev, cnt_prev = nxt, cnt_nxt
+        if done:
             if stats is not None:
                 stats["rounds"] = rounds
             break
-        prev = nxt
-        cnt_prev = cnt_nxt
     else:
         raise RuntimeError(
             f"dedup_clusters_star: not converged after {max_iter} rounds"
@@ -1120,11 +1122,11 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
         .transform(_persisted)
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     # slim per-edge fan-out table, partitioned by src like e
     ed = e.join(deg, on="src").transform(_persisted) \
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank: edge list is empty (no nodes)")
@@ -1145,7 +1147,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                      + F.expr("(85 * coalesce(s, 0)) DIV 100")).alias("rank"))
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = ranks.transform(_checkpointed)
     return ranks
 
 
@@ -1220,14 +1222,14 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
         .transform(_persisted)
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
         .transform(_persisted)
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     hubs = nodes.select("node", F.lit(scale).cast("long").alias("h"))
     auth = None
@@ -1256,13 +1258,13 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         a_raw = (
             e.join(hubs, e["src"] == hubs["node"])
             .groupBy(e["dst"].alias("node")).agg(F.sum("h").alias("raw"))
-            .localCheckpoint(eager=False)
+            .transform(_checkpointed, eager=False)
         )
         auth = _norm(a_raw, "a")
         h_raw = (
             e.join(auth, e["dst"] == auth["node"])
             .groupBy(e["src"].alias("node")).agg(F.sum("a").alias("raw"))
-            .localCheckpoint(eager=False)
+            .transform(_checkpointed, eager=False)
         )
         hubs = _norm(h_raw, "h")
     return (
@@ -1493,7 +1495,7 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         .distinct()
         .repartition("src")
         .transform(_persisted)
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     labels = e.select(F.col("src").alias("node")).distinct() \
         .select("node", F.col("node").alias("community"))
@@ -1514,7 +1516,7 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             .agg(F.expr("min_by(lbl, struct(-cnt, lbl))").alias("community"))
         )
         if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            labels = labels.localCheckpoint(eager=True)
+            labels = labels.transform(_checkpointed)
     return labels
 
 
@@ -1713,7 +1715,7 @@ def kcore(pairs: DataFrame, k: int, id_a: str = "id_a", id_b: str = "id_b",
         # re-materialize the base from the plan-matched cache instead of
         # re-running the candidate generator (see label_propagation)
         .transform(_persisted)
-        .localCheckpoint(eager=True)
+        .transform(_checkpointed)
     )
     prev_edges: int | None = None
     for i in range(rounds):
@@ -1726,7 +1728,7 @@ def kcore(pairs: DataFrame, k: int, id_a: str = "id_a", id_b: str = "id_b",
                    how="left_semi")
             .join(keep.withColumnRenamed("node", "dst"), on="dst",
                   how="left_semi")
-        ).localCheckpoint(eager=True)
+        ).transform(_checkpointed)
         _cache.free_ckpt(prev)
         # convergence probe: peeling is idempotent once no edge drops,
         # so breaking early returns EXACTLY the fixed-round result the

@@ -1194,27 +1194,6 @@ def _mp3_vbr_row(rid: int, data: bytes) -> dict:
             "duration_ms_walk": walk["duration_ms"], "vbr": walk["vbr"]}
 
 
-def audio_profile_vbr(df: DataFrame, id_col: str,
-                      payload_col: str = "payload") -> DataFrame:
-    """MP3 profiling through BOTH paths side by side: the O(1) Xing/VBRI
-    header fast path (production: one header parse per stream, exact VBR
-    duration with no walk) and the full frame-chain walk (verification).
-    Emits the Xing-convention frame-count delta explicitly
-    (n_frames_walk = n_frames_fast + 1 when a header frame is present)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_mp3_vbr_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=MP3_VBR_SCHEMA)
-
-
 def synth_audio_profile_vbr(df: DataFrame, id_col: str) -> DataFrame:
     """Fused synth→(Xing/VBRI fast path + chain-walk verify)."""
     return _fused_synth(

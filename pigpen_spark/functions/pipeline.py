@@ -1187,19 +1187,6 @@ def sample_per_group(df: DataFrame, strata_col, id_col, k: int,
     return df.withColumn(tmp, rn).filter(F.col(tmp) <= k).drop(tmp)
 
 
-def sample_per_group_sql(table: str, strata_col: str, id_col: str, k: int,
-                         salt: str = "persample") -> str:
-    """DuckDB oracle for :func:`sample_per_group` (same md5 order key)."""
-    return f"""
-    SELECT * EXCLUDE (__rn) FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY {strata_col}
-        ORDER BY md5({id_col}::VARCHAR || '|{salt}'), {id_col}
-      ) AS __rn FROM {table}
-    ) WHERE __rn <= {k}
-    """
-
-
 def weighted_sample_per_group(df: DataFrame, strata_col, id_col, weight_ppm,
                               k: int, salt: str = "wsample") -> DataFrame:
     """Deterministic WEIGHT-BIASED k-per-stratum sample — the curation

@@ -134,8 +134,10 @@ def _set_region_partitions(spark: SparkSession, n: int) -> None:
 _CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 from pigpen_spark import cache as _cache
+from pigpen_spark.cache import checkpointed as _checkpointed
 from pigpen_spark.cache import persisted as _persisted
 from pigpen_spark.functions.dedup import token_hashes, token_hashes_sql
+from pigpen_spark.operators.windows import partition_offsets
 
 #: out-of-range sentinels for rank/symbol lookups past either end; two
 #: DISTINCT values per side so a missing left neighbour never "equals" a
@@ -180,27 +182,24 @@ def pack_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         # docs in a handful of buckets (single-partition windows), and
         # past 2^53 the double division below can round and break bucket
         # monotonicity.  Fall back to a SAMPLED range partition — the pid
-        # is frozen with an eager checkpoint so the offsets pass and the
-        # window pass provably read the same tagging (the _dense_rank
-        # self-join lesson).  NOT registered for scoped release: the
-        # caller's returned plan still reads positions, which derives
-        # from this frame — it lives as long as the session's caches.
+        # is frozen in a checkpoint so the offsets pass and the window
+        # pass provably read the same tagging (the _dense_rank self-join
+        # lesson).  Registered with the session: the returned positions
+        # derive from it, so it lives until clear_engine_caches.
         bucketed = (
             toks.repartitionByRange(n_buckets, F.col("doc_id"))
             .withColumn(pid, F.spark_partition_id())
-            .localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL))
+            .transform(_checkpointed, eager=False, level=_CKPT_LEVEL))
     else:
         idc = F.col("doc_id").cast("long") - F.lit(lo)
         div = max(1, -(-span // n_buckets))
         bucketed = toks.withColumn(
             pid, ((idc - idc % F.lit(div)) / F.lit(div)).cast("long"))
-    sums = {r["p"]: r["s"] for r in bucketed.groupBy(F.col(pid).alias("p"))
-            .agg(F.sum("n").alias("s")).collect()}
+    off, total = partition_offsets(bucketed, pid, F.sum("n"))
     # the per-bucket sizes already total the packed corpus length —
     # derive the construction region's shuffle width from it before the
     # first corpus-sized exchange runs (no-op outside a _no_aqe region)
-    _set_region_partitions(docs.sparkSession, sum(sums.values()))
-    off = _offset_expr(sums, pid)
+    _set_region_partitions(docs.sparkSession, total)
     from pyspark.sql import Window
     w = Window.partitionBy(pid).orderBy("doc_id") \
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -275,46 +274,6 @@ def _dense_rank_sym(df: DataFrame) -> tuple[DataFrame, int]:
                            (sym - sym % F.lit(div)) / F.lit(div))
 
 
-def _offset_expr(counts: dict[int, int], colname: str):
-    """Cumulative-offset lookup expression for a bounded per-bucket
-    count vector: an ARRAY literal indexed by (bucket − lo) — O(1)
-    ``GetArrayItem`` per row.  (The create_map literal form is a LINEAR
-    scan of every entry per row — at 512 buckets that was the dominant
-    per-row cost of reading a rank table.)  Falls back to the map form
-    if the bucket id range is somehow huge/sparse."""
-    if not counts:
-        return F.lit(0)
-    lo_b, hi_b = min(counts), max(counts)
-    if hi_b - lo_b + 1 <= 4096:
-        arr, acc = [], 0
-        for b in range(lo_b, hi_b + 1):
-            arr.append(acc)
-            acc += counts.get(b, 0)
-        # ONE SQL-text parse instead of per-element F.lit()/F.array()
-        # py4j round trips: at 16×cores buckets that was ~500 gateway
-        # calls per rank round, measured 1.6 s of driver time per
-        # maximal_repeats run (cProfile; the JVM parse of the same
-        # literal is sub-ms).  The L suffix keeps every element BIGINT —
-        # the consumers cast the sum to long regardless, so result
-        # types/values are unchanged.
-        arr_sql = "array(" + ",".join(f"{x}L" for x in arr) + ")"
-        return F.element_at(
-            F.expr(arr_sql),
-            (F.col(colname) - F.lit(lo_b)).cast("int") + 1)
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    # cast keys uniformly: a mix of int-sized and long-sized Python
-    # literals would otherwise give the map mixed key types and an
-    # AnalysisException at plan time (negative sentinel buckets next to
-    # ordinary ones can straddle the int boundary)
-    return F.element_at(
-        F.create_map(*[c for k, v in offsets.items()
-                       for c in (F.lit(k).cast("long"), F.lit(v))]),
-        F.col(colname).cast("long"))
-
-
 def _dense_rank_via(df: DataFrame, cols: list[str],
                     bucket) -> tuple[DataFrame, int]:
     """Shared two-phase machinery for the derived-bucket rank forms:
@@ -338,22 +297,14 @@ def _dense_rank_via(df: DataFrame, cols: list[str],
     local = pre.select(
         "pos", "__sab",
         (F.dense_rank().over(w) - 1).cast("long").alias("__salr"))
-    # NON-eager checkpoint: the counts collect right below is the first
+    # NON-eager checkpoint: the offsets collect right below is the first
     # action, so ONE job both materializes the round table's blocks and
     # reads the per-bucket maxima off it — the eager form paid a separate
     # materialization job per round (fixed job latency, guide §1.2/§2.4)
-    ck = _cache.hold_ckpt(
-        local.localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL))
-    counts = {
-        r["b"]: r["c"] + 1
-        for r in ck.groupBy(F.col("__sab").alias("b"))
-        .agg(F.max("__salr").alias("c")).collect()
-    }
-    out = ck.select(
-        "pos",
-        (F.col("__salr") + _offset_expr(counts, "__sab")).cast("long")
-        .alias("rank"))
-    return out, sum(counts.values())
+    ck = local.transform(_checkpointed, eager=False, level=_CKPT_LEVEL)
+    off, total = partition_offsets(ck, "__sab", F.max("__salr") + 1)
+    out = ck.select("pos", (F.col("__salr") + off).cast("long").alias("rank"))
+    return out, total
 
 
 def _dense_rank(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
@@ -394,20 +345,14 @@ def _dense_rank(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
     # is the first action, so one job materializes the frozen tagging
     # AND reads the offsets off it — the determinism guarantee is
     # unchanged (a single materialization, all consumers read blocks).
-    ranged = _cache.hold_ckpt(
-        df.repartitionByRange(*[F.col(c) for c in cols])
-        .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL))
-    counts = {
-        r["p"]: r["c"]
-        for r in ranged.groupBy(F.col(pid).alias("p"))
-        .agg(F.countDistinct(*cols).alias("c")).collect()
-    }
-    off = _offset_expr(counts, pid)
+    ranged = (df.repartitionByRange(*[F.col(c) for c in cols])
+              .withColumn(pid, F.spark_partition_id())
+              .transform(_checkpointed, eager=False, level=_CKPT_LEVEL))
+    off, total = partition_offsets(ranged, pid, F.countDistinct(*cols))
     w = Window.partitionBy(pid).orderBy(*[F.col(c) for c in cols])
     out = ranged.withColumn(
         "rank", (F.dense_rank().over(w) - 1 + off).cast("long")).drop(pid)
-    return out, sum(counts.values())
+    return out, total
 
 
 #: rank-FORM cutoff (tokens): below it the in-place range-partitioned
@@ -446,6 +391,19 @@ def _dense_rank_join(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
     return out, total
 
 
+def _join_rank_round(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
+    """One large-corpus construction round: :func:`_dense_rank_join`,
+    then the (pos, rank) table materialized in its own checkpoint.  The
+    rank's internal persists and tagged checkpoint die with the round's
+    scope; only the round table — read by the next round and the LCP
+    descent — stays registered."""
+    with _cache.scope():
+        rr, total = _dense_rank_join(df, cols)
+        r = rr.select("pos", "rank").localCheckpoint(
+            eager=True, storageLevel=_CKPT_LEVEL)
+    return _cache.hold(r), total
+
+
 #: rank-table radix: each construction round ranks the tuple of RADIX
 #: previous-round ranks at offsets 0, w, 2w, … (generalized prefix
 #: doubling).  Radix 4 halves the round count vs binary doubling at the
@@ -477,10 +435,10 @@ def suffix_ranks(positions: DataFrame,
     # pagerank, hits): with persist alone each round's plan nests the
     # previous round's, and by round ~8 plan construction itself
     # (AQE re-planning, tree stringification) dominates or overflows
-    # Memory discipline (the 100x OOM lesson): each round's registry
-    # persists (rank-input + range-partitioned internals) die with the
-    # round via the scoped cache release — only the round's CHECKPOINTED
-    # rank table survives, because the LCP descent still needs it.
+    # Memory discipline (the 100x OOM lesson): each round's persists and
+    # rank-internal checkpoints die with the round's cache scope — only
+    # the round's CHECKPOINTED rank table survives (registered for the
+    # caller's scope), because the LCP descent still needs it.
     # corpus length up front (positions arrives persisted from
     # maximal_repeats): it picks BOTH the radix and the rank form, and
     # replaces the old post-round-0 r.count() job — same total jobs.
@@ -490,21 +448,9 @@ def suffix_ranks(positions: DataFrame,
     if radix == "auto":
         radix = _RADIX_SMALL if n <= _RADIX_CUTOFF else 2
     small = n <= _RANK_JOIN_CUTOFF
-    rank_fn = _dense_rank if small else _dense_rank_join
-    m0 = _cache.mark()
-    if small:
-        ranked0, n_ranks = _dense_rank_sym(positions.select("pos", "sym"))
-        r = ranked0.select("pos", "rank")
-    else:
-        mk0 = _cache.mark_ckpt()
-        ranked0, n_ranks = rank_fn(positions.select("pos", "sym"), ["sym"])
-        r = ranked0.select("pos", "rank").localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
-        # the rank-internal tagged checkpoint (_dense_rank's ranged) is
-        # dead once the round table is materialized — free it now, THEN
-        # register the round table for the descent-lifetime release
-        _cache.release_ckpt_since(mk0)
-        _cache.hold_ckpt(r)
-    _cache.release_since(m0)
+    syms = positions.select("pos", "sym")
+    r, n_ranks = (_dense_rank_sym(syms) if small
+                  else _join_rank_round(syms, ["sym"]))
     out = [(1, r)]
     width = 1
     from pyspark.sql import Window
@@ -550,7 +496,6 @@ def suffix_ranks(positions: DataFrame,
                              F.col("rank").alias(f"r{i}"))
                 paired = (paired.join(b, "pos", "left")
                           .withColumn(f"r{i}", F.coalesce(f"r{i}", F.lit(-1))))
-        m = _cache.mark()
         if small:
             # rounds past the first have a KNOWN-UNIFORM leading key
             # (r0 = previous round's dense rank, on [0, n_ranks)): the
@@ -559,15 +504,9 @@ def suffix_ranks(positions: DataFrame,
             # sequential job barriers drop from 4 (persist, boundary
             # sample, countDistinct, checkpoint) to 2 (rank+checkpoint,
             # bounded per-bucket max collect)
-            rr, n_ranks = _dense_rank_bucketed(paired, cols, n_ranks)
-            r = rr.select("pos", "rank")
+            r, n_ranks = _dense_rank_bucketed(paired, cols, n_ranks)
         else:
-            mk = _cache.mark_ckpt()
-            rr, n_ranks = rank_fn(paired, cols)
-            r = rr.select("pos", "rank").localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
-            _cache.release_ckpt_since(mk)  # rank-internal tagged ckpt
-            _cache.hold_ckpt(r)
-        _cache.release_since(m)
+            r, n_ranks = _join_rank_round(paired, cols)
         width *= radix
         out.append((width, r))
     return out
@@ -678,20 +617,22 @@ def maximal_repeats(docs: DataFrame, id_col: str, text_col: str,
     # bench scale but must flip to partitioned joins once they outgrow
     # the threshold at corpus scale (the forced-SMJ form was measured
     # 7× slower in-suite at sf0.1).
-    mck = _cache.mark_ckpt()
-    with _no_aqe(docs.sparkSession):
+    spark = docs.sparkSession
+    with _no_aqe(spark):
         positions = pack_positions(docs, id_col, text_col) \
             .transform(_persisted)
         n = positions.count()
-        tables = suffix_ranks(positions, n=n)
-    d_final = adjacent_lcp(tables, n=n)
     # the descent output is checkpointed, so the rank tables' blocks are
-    # dead weight from here — free them NOW (the 100x OOM lesson:
-    # ~log(L) corpus-sized cached tables × multiple bench passes
-    # otherwise accumulate until the heap gives out).  unpersist() on a
-    # checkpoint-backed frame is a no-op, so the release goes through
-    # the checkpoint registry, which unpersists the underlying RDDs.
-    _cache.release_ckpt_since(mck)
+    # dead weight once it exists — they die with this scope (the 100x
+    # OOM lesson: ~log(L) corpus-sized tables × multiple bench passes
+    # otherwise accumulate until the heap gives out).  positions and the
+    # descent output outlive it: the returned plan reads both.
+    with _cache.scope():
+        with _no_aqe(spark):
+            _set_region_partitions(spark, n)
+            tables = suffix_ranks(positions, n=n)
+        d_final = adjacent_lcp(tables, n=n)
+    _cache.hold(d_final)
     d = d_final.filter(F.col("lcp") >= F.lit(min_len))
     d = d.select(
         F.least("pos_a", "pos_b").alias("p_lo"),

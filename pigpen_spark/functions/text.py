@@ -360,15 +360,6 @@ def repeated_line_char_fraction(col) -> Column:
     return F.try_divide(dup_chars.cast("double"), total)
 
 
-def repeated_line_char_fraction_sql(col: str) -> str:
-    ls = _lines_sql(col)
-    return (
-        f"list_sum([(len(list_filter({ls}, x -> x = d)) - 1) * len(d)"
-        f" for d in list_distinct({ls})])::DOUBLE"
-        f" / nullif(list_sum([len(l) for l in {ls}]), 0)"
-    )
-
-
 def alpha_token_fraction(col) -> Column:
     """Fraction of tokens containing at least one alphabetic character
     (Gopher's 80%-alpha gate).  NULL for token-less docs."""
@@ -545,13 +536,6 @@ def blocklist_hit(col, blocklist: list[str]) -> Column:
     broadcast equi-join."""
     lit = F.array(*[F.lit(w.lower()) for w in blocklist])
     return F.arrays_overlap(tokens(_c(col)), lit)
-
-
-def blocklist_hit_sql(col: str, blocklist: list[str]) -> str:
-    """DuckDB equivalent of :func:`blocklist_hit`."""
-    toks = f"list_filter(string_split(lower({col}), ' '), t -> t <> '')"
-    lits = ", ".join("'" + w.lower().replace("'", "''") + "'" for w in blocklist)
-    return f"len(list_filter(({toks}), t -> list_contains([{lits}], t))) > 0"
 
 
 def blocklist_hits_join(df, id_col: str, text_col: str, words_df,

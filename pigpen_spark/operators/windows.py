@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pigpen_spark.cache import persisted as _persisted
+from pigpen_spark.cache import checkpointed as _checkpointed
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,12 +33,13 @@ def ranked(df: DataFrame, order_by: Sequence, index_col: str = "index",
     Pig's RANK uses), then rank within each partition in parallel and add
     the partition's global offset.
 
-    The scale-safe path persists the range-partitioned input for the
-    session (the partition-id column must be identical between the count
-    pass and the output pass, so the cache is semantically load-bearing,
-    not just a speedup).  Long-lived sessions ranking many relations
-    should call :func:`pigpen_spark.tuning.clear_engine_caches` between
-    corpora — same lifetime contract as the dedup/similarity operators.
+    The scale-safe path freezes the (row, partition id) tagging in a
+    registered non-eager local checkpoint: the offsets collect is its
+    first action, and the output reads the same blocks however it is
+    consumed (a self-join's relation dedup, a ``clearCache()``).  The
+    returned frame lives until :func:`pigpen_spark.tuning.clear_engine_caches`
+    (or an enclosing :func:`pigpen_spark.cache.scope`); after that it
+    fails loudly instead of being re-ranked from a new tagging.
     """
     orders = [_c(c) for c in order_by]
     if partition_by:
@@ -55,37 +56,57 @@ def ranked(df: DataFrame, order_by: Sequence, index_col: str = "index",
         return df.withColumn(index_col, (fn.over(w) - F.lit(1)).cast("long"))
 
     pid = "__pp_pid"
-    ranged = df.repartitionByRange(*orders).withColumn(pid, F.spark_partition_id())
-    ranged = ranged.transform(_persisted)
-    off = partition_offsets(ranged, F.col(pid))
+    ranged = (df.repartitionByRange(*orders)
+              .withColumn(pid, F.spark_partition_id())
+              .transform(_checkpointed, eager=False))
+    off, _ = partition_offsets(ranged, pid)
     w = Window.partitionBy(pid).orderBy(*orders)
-    out = ranged.withColumn(index_col, (F.row_number().over(w) - 1 + off).cast("long")).drop(pid)
-    return out
+    return ranged.withColumn(
+        index_col, (F.row_number().over(w) - 1 + off).cast("long")).drop(pid)
 
 
-def partition_offsets(tagged: DataFrame, pid: Column) -> Column:
-    """Global cumulative row offset per partition id — the shared core of
-    the two-phase rank (:func:`ranked`) and the columnar dense
-    ``map_indexed``: count rows per partition id (a bounded driver-side
-    vector, ONE long per partition — the same shape Pig RANK collects),
-    accumulate offsets in pid order, and return a create_map/element_at
-    lookup column.
+def partition_offsets(tagged: DataFrame, pid: str | Column,
+                      measure: Column | None = None) -> tuple[Column, int]:
+    """The two-phase offset primitive behind every scale-safe global
+    rank, index and prefix sum here (Pig RANK's shape): collect ONE
+    ``measure`` aggregate per partition id (default: the row count) — a
+    bounded driver-side vector — and accumulate it in pid order.
 
-    The caller MUST have persisted ``tagged`` already: the pid column has
-    to evaluate identically in the count pass and the output pass."""
-    counts = {
-        r["p"]: r["cnt"]
-        for r in tagged.groupBy(pid.alias("p")).agg(F.count(F.lit(1)).alias("cnt")).collect()
+    Returns ``(offset, total)``: ``offset`` is a column giving each row
+    the measure summed over all lower partition ids, ``total`` the sum
+    over all of them.  The offsets are an ARRAY literal indexed by
+    (pid − lowest pid): one SQL-text parse instead of a py4j round trip
+    per element, and an O(1) ``element_at`` per row (a map literal is a
+    linear scan per row).  Ids spread wider than 4096 fall back to a
+    map keyed on the id cast to long (mixed int/long key literals would
+    not type-check).
+
+    ``tagged`` must read a frozen tagging (a checkpoint, or a pid that is
+    a pure function of the row): pid has to evaluate identically in the
+    collect and in every later read of the offset column."""
+    pid = _c(pid)
+    if measure is None:
+        measure = F.count(F.lit(1))
+    sizes = {
+        r["p"]: r["m"] or 0
+        for r in tagged.groupBy(pid.alias("p")).agg(measure.alias("m")).collect()
     }
+    total = sum(sizes.values())
+    if not sizes:
+        return F.lit(0).cast("long"), 0
+    lo, hi = min(sizes), max(sizes)
+    dense = hi - lo < 4096
     offsets, acc = {}, 0
-    for p in sorted(counts):
+    for p in (range(lo, hi + 1) if dense else sorted(sizes)):
         offsets[p] = acc
-        acc += counts[p]
-    if not offsets:
-        return F.lit(0)
+        acc += sizes.get(p, 0)
+    if dense:
+        arr = F.expr("array(" + ",".join(f"{x}L" for x in offsets.values()) + ")")
+        return F.element_at(arr, (pid - F.lit(lo)).cast("int") + 1), total
     return F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]), pid
-    )
+        F.create_map(*[c for k, v in offsets.items()
+                       for c in (F.lit(k).cast("long"), F.lit(v).cast("long"))]),
+        pid.cast("long")), total
 
 
 def top_n_per_group(df: DataFrame, partition_by: Sequence, order_by: Sequence,
@@ -211,9 +232,11 @@ def take_budget(df: DataFrame, order_by: Sequence, size, budget: int,
     letting the NULL poison the cumulative sum and silently drop the row
     and everything the budget math owed it — budgeted selection over
     sizes that can be missing needs an explicit upstream ``coalesce``.
-    Persist lifetime: same session-lived cache contract as
-    :func:`ranked` (the range-partitioned input must evaluate identically
-    in the offset pass and the output pass)."""
+    Lifetime: the range-partitioned input is frozen in a registered
+    local checkpoint, exactly as in :func:`ranked` — the offsets pass and
+    the output pass read the same blocks, and after
+    :func:`pigpen_spark.tuning.clear_engine_caches` the returned frame
+    fails loudly rather than re-partitioning under frozen offsets."""
     orders = [_c(c) for c in order_by]
     size_c = _c(size)
     pid = "__pp_pid"
@@ -230,24 +253,9 @@ def take_budget(df: DataFrame, order_by: Sequence, size, budget: int,
         )
         .repartitionByRange(*orders)
         .withColumn(pid, F.spark_partition_id())
-        .transform(_persisted)
+        .transform(_checkpointed, eager=False)
     )
-    sums = {
-        r["p"]: r["s"]
-        for r in ranged.groupBy(F.col(pid).alias("p"))
-        .agg(F.coalesce(F.sum("__pp_sz"), F.lit(0)).alias("s")).collect()
-    }
-    offsets, acc = {}, 0
-    for p in sorted(sums):
-        offsets[p] = acc
-        acc += sums[p]
-    off = (
-        F.element_at(
-            F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-            F.col(pid),
-        )
-        if offsets else F.lit(0)
-    )
+    off, _ = partition_offsets(ranged, pid, F.sum("__pp_sz"))
     w = (
         Window.partitionBy(pid).orderBy(*orders)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

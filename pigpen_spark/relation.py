@@ -30,7 +30,7 @@ import itertools
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
-from pigpen_spark.cache import persisted as _persisted
+from pigpen_spark.cache import checkpointed as _checkpointed, persisted as _persisted
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -254,17 +254,17 @@ class Relation:
             # partition index in the high 31 bits and the per-partition
             # record number in the low 33 (documented layout), so
             # dense index = global-offset(partition) + low 33 bits.
-            # One tiny count-per-partition collect (one long per partition
-            # — the same bounded driver-side vector windows.ranked uses)
+            # One tiny count-per-partition collect (windows.partition_offsets)
             # replaces the RDD zipWithIndex round-trip through Python.
-            # The persist is load-bearing: the id column must be identical
-            # between the count pass and the output pass.
+            # The id column is frozen in a registered local checkpoint:
+            # it must be identical between the count pass and the output
+            # pass, however the output is consumed.
             from pigpen_spark.operators.windows import partition_offsets
 
             mid = _gensym("mid")
-            tagged = self.df.withColumn(mid, F.monotonically_increasing_id()).transform(_persisted)
-            pid = F.shiftright(F.col(mid), 33).cast("int")
-            off = partition_offsets(tagged, pid)
+            tagged = self.df.withColumn(mid, F.monotonically_increasing_id()) \
+                .transform(_checkpointed, eager=False)
+            off, _ = partition_offsets(tagged, F.shiftright(F.col(mid), 33).cast("int"))
             local = F.col(mid).bitwiseAND(F.lit((1 << 33) - 1))
             return self._with(
                 tagged.withColumn(index_col, (off + local).cast("long")).drop(mid)

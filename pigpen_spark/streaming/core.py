@@ -619,14 +619,11 @@ def ivf_pq_index_stream(
         # a long-running stream must not accumulate one cache per
         # micro-batch
         from pigpen_spark import cache as _cache
-        mk = _cache.mark()
-        try:
+        with _cache.scope():
             new_rows = ivf_code_batch(batch_df, cb, cents_df, m,
                                       id_col, vec_col)
             new_rows.write.mode("overwrite").parquet(
                 f"{lists_path}/batch={batch_id}")
-        finally:
-            _cache.release_since(mk)
 
     w = stream.writeStream.foreachBatch(handle) \
         .option("checkpointLocation", checkpoint)
@@ -698,8 +695,7 @@ def opq_index_stream(
                 "row_id int, r_vec array<double>",
             ).write.mode("overwrite").parquet(rotation_path)
         from pigpen_spark import cache as _cache
-        mk = _cache.mark()
-        try:
+        with _cache.scope():
             rot = rotate_vectors(batch_df, id_col, vec_col, R)
             try:
                 cb = stored_codebook(spark.read.parquet(codebook_path))
@@ -717,8 +713,6 @@ def opq_index_stream(
             ).select("id", "codes")
             codes.write.mode("overwrite").parquet(
                 f"{codes_path}/batch={batch_id}")
-        finally:
-            _cache.release_since(mk)
 
     w = stream.writeStream.foreachBatch(handle) \
         .option("checkpointLocation", checkpoint)
@@ -779,6 +773,7 @@ def take_budget_stream(
     Returns the started StreamingQuery."""
     import shutil
 
+    from pigpen_spark import cache as _cache
     from pigpen_spark.operators.windows import take_budget
 
     if budget < 0:
@@ -795,12 +790,15 @@ def take_budget_stream(
                 .collect()[0]["accepted_tokens"]
         accepted = 0
         if prev < budget and not batch_df.isEmpty():
-            sel = take_budget(batch_df, order_by, size, budget - prev)
-            sel = sel.withColumn("cum_size",
-                                 (F.col("cum_size") + F.lit(prev)).cast("long"))
-            sel.write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-            row = sel.agg(F.coalesce(F.max("cum_size"), F.lit(prev))
-                          .alias("m")).collect()[0]
+            # the cut's frozen tagging dies with the batch
+            with _cache.scope():
+                sel = take_budget(batch_df, order_by, size, budget - prev)
+                sel = sel.withColumn(
+                    "cum_size", (F.col("cum_size") + F.lit(prev)).cast("long"))
+                sel.write.mode("overwrite").parquet(
+                    f"{out_path}/batch={batch_id}")
+                row = sel.agg(F.coalesce(F.max("cum_size"), F.lit(prev))
+                              .alias("m")).collect()[0]
             accepted = int(row["m"]) - prev
         spark.createDataFrame(
             [(int(prev + accepted), int(batch_id))],

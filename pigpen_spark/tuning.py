@@ -62,16 +62,22 @@ def auto_configure(spark: SparkSession, df: DataFrame) -> dict[str, str]:
 
 
 def clear_engine_caches(spark: SparkSession) -> None:
-    """Release every DataFrame the ENGINE has persisted — and nothing else.
+    """Release every DataFrame the ENGINE has persisted or checkpointed —
+    and nothing else.
 
     Operators that self-join derived hash columns (minhash_candidates,
-    simhash_candidates, lsh_topk) and the two-phase global rank persist
-    intermediates so Catalyst can't re-inline their expression trees; the
-    caches live until session end (Spark evicts LRU under pressure).  In
-    a long-running driver that loops over many inputs, call this between
-    iterations.  Engine persists are tracked in
-    :mod:`pigpen_spark.cache`, so the user's own ``df.cache()`` data
-    survives (``spark.catalog.clearCache()`` would evict it too)."""
+    simhash_candidates, lsh_topk) persist intermediates so Catalyst can't
+    re-inline their expression trees; the two-phase rank/index/budget
+    operators and the iterative graph and suffix-array loops freeze
+    their tables in local checkpoints.  All of them live until session
+    end unless released.  In a long-running driver that loops over many
+    inputs, call this between iterations.  Engine holdings are tracked
+    in :mod:`pigpen_spark.cache`, so the user's own ``df.cache()`` data
+    survives (``spark.catalog.clearCache()`` would evict it too).
+
+    A frame returned before this call that reads a released engine
+    checkpoint fails loudly when next executed ("Checkpoint block ...
+    not found") — it is never silently re-ranked; rebuild it instead."""
     from pigpen_spark import cache
 
     cache.release()

@@ -95,12 +95,13 @@ class TestSortTakeSample:
 
     def test_map_indexed_dense_unordered(self, spark):
         # unordered dense: a 0..n-1 permutation across many partitions,
-        # produced columnar (no RDD round-trip through Python)
+        # produced columnar (no RDD round-trip through Python; the plan
+        # scans the frozen id tagging, a JVM-side local checkpoint)
         from pigpen_spark.relation import Relation
 
         r = Relation(spark.range(100).select(F.col("id").alias("x")).repartition(7))
         out = r.map_indexed()
-        assert "ExistingRDD" not in out.df._jdf.queryExecution().executedPlan().toString()
+        assert "PythonRDD" not in out.df._jdf.queryExecution().toRdd().toDebugString()
         rows = out.df.collect()
         assert sorted(row["index"] for row in rows) == list(range(100))
         assert len({row["x"] for row in rows}) == 100

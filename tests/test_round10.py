@@ -464,14 +464,27 @@ class TestOpqIndexStream:
 class TestRound10Plans:
     """Round-10 plan pins (scale properties, not values)."""
 
-    def test_mix_select_broadcasts_rates_no_collect(self, spark, sf_dir):
+    def test_mix_select_broadcasts_rates_no_collect(self, spark, sf_dir,
+                                                    monkeypatch):
         # the plan's rate table must reach the corpus as a BROADCAST
         # join (≤|sources| rows), and the budget cut must be the
-        # two-phase form — no single-partition global window
+        # two-phase form — no single-partition global window.  The cut
+        # freezes its input in a local checkpoint, so the join is read
+        # off the plan of the frame take_budget checkpoints.
         from pigpen_spark import catalog
         from pigpen_spark import catalog_ext  # noqa: F401 — registers
+        from pigpen_spark.operators import windows
+        frozen, checkpointed = [], windows._checkpointed
+
+        def spy(df, **kw):
+            frozen.append(df)
+            return checkpointed(df, **kw)
+
+        monkeypatch.setattr(windows, "_checkpointed", spy)
         df = catalog.queries()["ext_mix_select"](spark, sf_dir)
-        p = df._jdf.queryExecution().executedPlan().toString()
+        assert len(frozen) == 1
+        p = (frozen[0]._jdf.queryExecution().executedPlan().toString()
+             + df._jdf.queryExecution().executedPlan().toString())
         assert "BroadcastHashJoin" in p
         assert "CartesianProduct" not in p
         # a naive global cumsum would be Window over Exchange SinglePartition

@@ -1,4 +1,4 @@
-"""Round-11 optimization pins.
+"""Round-11 optimization pins, and the two-phase offset contract.
 
 The r10 regression root-cause and its guard rails:
 
@@ -10,10 +10,13 @@ The r10 regression root-cause and its guard rails:
   lookup misses, and the range exchange re-samples its boundaries with
   the offsets frozen from the first sampling — nondeterministically
   collapsed ranks (the r10 red invariance pin).  The fix freezes the
-  tagged frame with an eager localCheckpoint.
-- Checkpoint blocks are now freed deterministically through the cache
-  registry (`hold_ckpt`/`release_ckpt_since`/`free_ckpt`) instead of the
-  no-op `DataFrame.unpersist()` on checkpoint-backed frames.
+  tagged frame in a registered non-eager localCheckpoint, which the
+  offsets collect materializes.  `ranked`, `Relation.map_indexed` and
+  `take_budget` freeze their tagging the same way, and all of them share
+  one offset primitive, `windows.partition_offsets`.
+- Checkpoint blocks are freed deterministically through the one cache
+  registry (`cache.hold`, `with cache.scope():`, `free_ckpt`) instead of
+  the no-op `DataFrame.unpersist()` on checkpoint-backed frames.
 """
 
 import pytest
@@ -139,14 +142,80 @@ class TestOffsetExprMixedKeys:
     uniformly — mixed int/long keys are an AnalysisException."""
 
     def test_mixed_small_and_huge_bucket_ids(self, spark):
-        from pigpen_spark.functions import suffix as X
+        from pigpen_spark.operators.windows import partition_offsets
         counts = {-(1 << 40): 3, 5: 2, (1 << 40) + 7: 4}
-        expr = X._offset_expr(counts, "b")
         df = spark.createDataFrame(
-            [(-(1 << 40),), (5,), ((1 << 40) + 7,)], "b long")
+            [(b,) for b, c in counts.items() for _ in range(c)], "b long")
+        expr, total = partition_offsets(df, "b")
+        assert total == 9
         got = {r["b"]: r["o"] for r in df.select(
-            "b", expr.alias("o")).collect()}
+            "b", expr.alias("o")).distinct().collect()}
         assert got == {-(1 << 40): 0, 5: 3, (1 << 40) + 7: 5}
+
+
+class TestTwoPhaseOffsetsFrozen:
+    """Results never depend on a cache being hit or kept: every operator
+    built on `partition_offsets` must give the ground truth when its
+    output is consumed through a self-join (relation dedup re-assigns
+    expression ids, so a persist-based tagging would miss its cache), and
+    again when `clearCache()` runs between build and collect."""
+
+    N = 600
+
+    def _rows(self):
+        import random
+        rng = random.Random(11)
+        return [(i, rng.randrange(0, 50), rng.randrange(1, 9))
+                for i in range(self.N)]
+
+    def _build(self, spark, op, rows):
+        from pigpen_spark.operators.windows import ranked, take_budget
+        from pigpen_spark.relation import Relation
+        df = spark.createDataFrame(rows, "id long, k long, sz long") \
+            .repartition(5)
+        order = [F.col("k"), F.col("id")]
+        if op == "ranked":
+            return ranked(df, order).select("id", F.col("index").alias("v"))
+        if op == "map_indexed":
+            return Relation(df).map_indexed().df \
+                .select("id", F.col("index").alias("v"))
+        return take_budget(df, order, "sz", 700) \
+            .select("id", F.col("cum_size").alias("v"))
+
+    def _truth(self, op, rows):
+        by_key = sorted(rows, key=lambda r: (r[1], r[0]))
+        if op == "ranked":
+            return {r[0]: i for i, r in enumerate(by_key)}
+        if op == "map_indexed":
+            return None  # any 0..n-1 permutation, identical on both sides
+        out, cum = {}, 0
+        for i, _, sz in by_key:
+            if cum >= 700:
+                break
+            cum += sz
+            out[i] = cum
+        return out
+
+    def _check(self, op, rows, out):
+        a, b = out.alias("a"), out.alias("b")
+        got = a.join(b, F.col("a.id") == F.col("b.id")).select(
+            F.col("a.id").alias("id"), F.col("a.v").alias("va"),
+            F.col("b.v").alias("vb")).collect()
+        assert all(r["va"] == r["vb"] for r in got)
+        truth = self._truth(op, rows)
+        if truth is None:
+            assert sorted(r["va"] for r in got) == list(range(len(rows)))
+            assert len({r["id"] for r in got}) == len(rows)
+        else:
+            assert {r["id"]: r["va"] for r in got} == truth
+
+    @pytest.mark.parametrize("op", ["ranked", "map_indexed", "take_budget"])
+    def test_self_join_matches_ground_truth(self, spark, op):
+        rows = self._rows()
+        self._check(op, rows, self._build(spark, op, rows))
+        out = self._build(spark, op, rows)
+        spark.catalog.clearCache()
+        self._check(op, rows, out)
 
 
 class TestWinnowDfCutEquivalence:

@@ -52,6 +52,88 @@ class TestCacheRegistry:
             clear_engine_caches(spark)
         assert cache.held_count() == 0
 
+    def _ranked(self, spark, n):
+        from pigpen_spark.operators.windows import ranked
+        df = spark.range(n).repartition(3)
+        return ranked(df, [F.col("id")])
+
+    def test_release_frees_checkpoint_backed_frame(self, spark):
+        jsc = spark.sparkContext._jsc.sc()
+        clear_engine_caches(spark)
+        base = jsc.getPersistentRDDs().size()
+        out = self._ranked(spark, 300)
+        assert out.count() == 300
+        assert cache.held_count() == 1
+        assert jsc.getPersistentRDDs().size() == base + 1
+        clear_engine_caches(spark)
+        assert cache.held_count() == 0
+        assert jsc.getPersistentRDDs().size() == base
+        # the frozen tagging is gone: a new plan over the returned frame
+        # fails loudly instead of re-ranking from a fresh sampling
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            out.count()
+
+    def test_nested_scope_frees_only_its_own(self, spark):
+        clear_engine_caches(spark)
+        with cache.scope():
+            outer = self._ranked(spark, 200)
+            with cache.scope():
+                inner = self._ranked(spark, 100)
+                assert inner.count() == 100
+                assert cache.held_count() == 2
+            assert cache.held_count() == 1
+            assert outer.count() == 200
+            with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+                inner.count()
+        assert cache.held_count() == 0
+
+    def test_scopes_are_per_thread(self):
+        """Concurrent scopes on many threads free exactly their own
+        holdings, each once, and leave the registry as they found it."""
+        import sys
+        import threading
+
+        class Fake:  # a persisted frame: release calls unpersist()
+            is_cached = True
+
+            def __init__(self):
+                self.freed = 0
+
+            def unpersist(self):
+                self.freed += 1
+
+        base = cache.held_count()
+        errors, frames = [], []
+        lock = threading.Lock()
+
+        def work():
+            try:
+                for _ in range(50):
+                    with cache.scope():
+                        mine = [cache.hold(Fake()) for _ in range(4)]
+                    if any(f.freed != 1 for f in mine):
+                        errors.append([f.freed for f in mine])
+                    with lock:
+                        frames.extend(mine)
+            except Exception as e:  # noqa: BLE001 — reported below
+                errors.append(repr(e))
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work) for _ in range(16)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors[:3]
+        assert len(frames) == 16 * 50 * 4
+        assert all(f.freed == 1 for f in frames)
+        assert cache.held_count() == base
+
 
 class TestDuplicateIdFailFast:
     def test_duplicate_ids_raise(self, spark):
