@@ -1815,8 +1815,9 @@ def ext_maximal_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     alignment and length — completing the substring-dedup family whose
     other members are fixed-window approximations): distributed
     prefix-doubling suffix array (the published distributed-memory SA
-    construction — O(log L) rounds of offset-join + scale-safe dense
-    rank, lineage-truncated per round), LCP by the sparse-rank descent
+    construction — O(log₄ L) rounds of lead-window pairing +
+    derived-bucket dense rank, lineage-truncated per round, one form at
+    every corpus size), LCP by the sparse-rank descent
     over the same round tables, then left-maximality via the preceding
     symbol.  Reports (doc_a, off_a, doc_b, off_b, rep_len) per
     left-maximal adjacent-suffix repeat ≥ 6 tokens.  The oracle mirrors

@@ -11,10 +11,12 @@ window size.
 
 Architecture choice (Spark-first, not a port): the suffix array is built
 by GENERALIZED PREFIX DOUBLING expressed entirely in DataFrame ops —
-O(log₄ L) rounds of (radix−1 offset self-joins → in-place scale-safe
+O(log₄ L) rounds of (one lead-window pairing exchange → derived-bucket
 dense rank), the published distributed-memory SA construction (Flick &
 Aluru, SC'15) at radix 4: per-round cost here is dominated by FIXED job
 latency, so fewer/fatter rounds win (round 9: 30.7 → 15.4 s at sf0.1).
+The same form runs at every corpus size, up to the 3·10⁹-token bound of
+its long rank key, under the session's own adaptive execution.
 A per-shard DC3 in Arrow batches was considered and rejected: a
 monolithic in-batch SA caps the corpus at one executor's memory, and
 sharding it silently loses every cross-shard repeat — the doubling form
@@ -38,92 +40,10 @@ they are AS MATERIALIZED (the CTE-inlining landmine).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-
-#: re-entrancy guard for _no_aqe: only the OUTERMOST region saves and
-#: restores the session value, so nested/overlapping regions on one
-#: thread can never write back the inner region's "false".  The setting
-#: is still session-global — concurrent queries on OTHER driver threads
-#: of the same session would run without AQE for the duration; the
-#: engine's single-threaded bench/oracle contract makes that a
-#: documented non-event, and callers that multi-thread the driver should
-#: give maximal_repeats its own ``spark.newSession()``.
-_NO_AQE_LOCK = __import__("threading").RLock()
-_NO_AQE_STATE: dict = {"depth": 0, "old": None}
-
-
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Run the EAGER suffix-array region (round checkpoints, bounded
-    collects) with adaptive execution off, restoring the session value
-    after.  AQE materializes every Exchange as its own job and re-plans
-    at the driver between them — a sequential barrier per shuffle.  The
-    shuffles here are fixed-width and DERIVED-partitioned (bucket/block
-    expressions), so runtime re-planning has nothing to improve — AQE
-    skew handling does not apply to windows at all — while its barriers
-    dominate the wall time of this latency-bound iterative operator
-    (measured at sf0.1: 46 jobs for one ext_maximal_repeats run, ~60%
-    of them AQE exchange materializations; guide §7.2 AdaptiveSparkPlan
-    / §1.2 configuration-after-algorithm).
-
-    The region also restores ``spark.sql.shuffle.partitions``: with AQE
-    off the construction forfeits runtime partition coalescing, so
-    :func:`_set_region_partitions` re-derives the width from the packed
-    corpus length once pack_positions has counted it (guide §2.2 —
-    size partitions from the data, not from a constant tuned to either
-    local mode or the cluster)."""
-    with _NO_AQE_LOCK:
-        if _NO_AQE_STATE["depth"] == 0:
-            _NO_AQE_STATE["old"] = spark.conf.get(
-                "spark.sql.adaptive.enabled", "true")
-            _NO_AQE_STATE["old_parts"] = spark.conf.get(
-                "spark.sql.shuffle.partitions", "200")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _NO_AQE_STATE["depth"] += 1
-    try:
-        yield
-    finally:
-        with _NO_AQE_LOCK:
-            _NO_AQE_STATE["depth"] -= 1
-            if _NO_AQE_STATE["depth"] == 0:
-                spark.conf.set("spark.sql.adaptive.enabled",
-                               _NO_AQE_STATE["old"])
-                spark.conf.set("spark.sql.shuffle.partitions",
-                               _NO_AQE_STATE["old_parts"])
-
-
-#: floor on rows per construction task — below this the fixed per-task
-#: cost (scheduling, shuffle-file handling, codegen warm-up) dominates
-#: the work itself (measured: an exchange+sort of 276k slim rows cost
-#: 1.14 s at 64×64 tasks vs 0.19 s at 8×16 on the same data)
-_MIN_ROWS_PER_TASK = 65_536
-#: target rows per construction task at scale: ~32 B/row of slim longs
-#: ⇒ ~64 MB partitions, the same size AQE's advisoryPartitionSizeInBytes
-#: coalescing would produce if it were on (session.py) — the no-AQE
-#: region re-derives what AQE would have chosen, without its barriers
-_TARGET_ROWS_PER_TASK = 2_000_000
-
-
-def _set_region_partitions(spark: SparkSession, n: int) -> None:
-    """Derive ``spark.sql.shuffle.partitions`` for the construction
-    region from the packed corpus length ``n``: full core-count
-    parallelism as soon as every task holds ≥ :data:`_MIN_ROWS_PER_TASK`
-    rows, growing past the core count once tasks reach
-    :data:`_TARGET_ROWS_PER_TASK` (~64 MB) each.  Scale-adaptive by
-    construction — never a constant tuned for one machine.  No-op unless
-    inside a :func:`_no_aqe` region (which restores the old value)."""
-    with _NO_AQE_LOCK:
-        if _NO_AQE_STATE["depth"] == 0:
-            return
-        par = spark.sparkContext.defaultParallelism
-        parts = max(1, min(max(par, -(-n // _TARGET_ROWS_PER_TASK)),
-                           -(-n // _MIN_ROWS_PER_TASK)))
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
 
 #: serialized + spillable blocks for every checkpoint here: the rank
 #: tables are corpus-sized and ALL retained for the LCP descent, so the
@@ -183,9 +103,10 @@ def pack_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         # past 2^53 the double division below can round and break bucket
         # monotonicity.  Fall back to a SAMPLED range partition — the pid
         # is frozen in a checkpoint so the offsets pass and the window
-        # pass provably read the same tagging (the _dense_rank self-join
-        # lesson).  Registered with the session: the returned positions
-        # derive from it, so it lives until clear_engine_caches.
+        # pass provably read the same tagging (a persist alone can miss
+        # the cache under self-join relation dedup and re-sample).
+        # Registered with the session: the returned positions derive
+        # from it, so it lives until clear_engine_caches.
         bucketed = (
             toks.repartitionByRange(n_buckets, F.col("doc_id"))
             .withColumn(pid, F.spark_partition_id())
@@ -195,11 +116,7 @@ def pack_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         div = max(1, -(-span // n_buckets))
         bucketed = toks.withColumn(
             pid, ((idc - idc % F.lit(div)) / F.lit(div)).cast("long"))
-    off, total = partition_offsets(bucketed, pid, F.sum("n"))
-    # the per-bucket sizes already total the packed corpus length —
-    # derive the construction region's shuffle width from it before the
-    # first corpus-sized exchange runs (no-op outside a _no_aqe region)
-    _set_region_partitions(docs.sparkSession, total)
+    off, _ = partition_offsets(bucketed, pid, F.sum("n"))
     from pyspark.sql import Window
     w = Window.partitionBy(pid).orderBy("doc_id") \
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -220,12 +137,11 @@ def _dense_rank_bucketed(df: DataFrame, cols: list[str],
                          n_prev: int) -> tuple[DataFrame, int]:
     """Dense rank for construction rounds past the first, whose keys are
     PREVIOUS-ROUND dense ranks on [0, n_prev) (missing neighbours −1) —
-    the same two-phase in-place rank as :func:`_dense_rank` but with the
-    range partitioning DERIVED instead of sampled: the bucket is a
-    monotone integer function of the (r0, r1) key prefix, so bucket
-    order IS key order and equal keys co-locate by construction.  This
-    removes two of the four sequential job barriers the sampled form
-    pays per round (guide §2.4 — remove shuffles/passes outright):
+    a two-phase in-place rank whose range partitioning is DERIVED, not
+    sampled: the bucket is a monotone integer function of the (r0, r1)
+    key prefix, so bucket order IS key order and equal keys co-locate by
+    construction.  Two sequential job barriers per round, no more
+    (guide §2.4 — remove shuffles/passes outright):
 
     - no ``repartitionByRange`` boundary-sampling pass (and therefore no
       persist of the round input to keep that pass from recomputing the
@@ -242,14 +158,14 @@ def _dense_rank_bucketed(df: DataFrame, cols: list[str],
     of keys).  The pair key = prefix of length 2·width, whose hot mass
     shrinks geometrically with the round.  B = 16× parallelism distinct
     buckets hash-spread over the shuffle (guide §2.5's synthetic-key
-    collision warning).  Returns the same contract as
-    :func:`_dense_rank` — (rows + ``rank``, total distinct) — and the
-    returned frame is already checkpoint-backed (lineage truncated;
-    callers must not re-checkpoint)."""
+    collision warning).  Returns the :func:`_dense_rank_via` contract —
+    ((pos, rank), total distinct) — and the returned frame is already
+    checkpoint-backed (lineage truncated; callers must not
+    re-checkpoint)."""
     # composite key (r0+1)*(n_prev+2) + (r1+1): monotone in the
-    # (r0, r1) lexicographic order, fits a long for any n_prev below
-    # _RANK_JOIN_CUTOFF (8e6² « 2^63); integer bucket arithmetic avoids
-    # float rounding
+    # (r0, r1) lexicographic order, fits a long for any n_prev up to
+    # _MAX_TOKENS (suffix_ranks refuses larger corpora); integer bucket
+    # arithmetic avoids float rounding
     n_buckets = max(16 * df.sparkSession.sparkContext.defaultParallelism, 64)
     span = (n_prev + 2) * (n_prev + 2)
     div = max(1, -(-span // n_buckets))
@@ -307,150 +223,55 @@ def _dense_rank_via(df: DataFrame, cols: list[str],
     return out, total
 
 
-def _dense_rank(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
-    """Scale-safe IN-PLACE dense rank of ``cols``: range-repartition on
-    the key (equal keys co-locate by construction), per-partition
-    ``dense_rank`` window, plus each partition's global offset — the
-    cumulative DISTINCT-key count of the partitions before it (a bounded
-    driver vector, one long per partition, the two-phase ranked()/Pig
-    RANK shape applied to dense ranks).
-
-    The SMALL-corpus form (≤ :data:`_RANK_JOIN_CUTOFF` tokens): the rank
-    is computed ON the rows (one range exchange), cutting the SA
-    construction's per-round cost to one shuffle + two bounded driver
-    jobs — the fixed per-round driver-job latency was 22% of the whole
-    bench (VERDICT r8).  Above the cutoff :func:`_dense_rank_join`
-    takes over (the full-corpus range sort stops paying once partitions
-    are task-bound).  Also returns the TOTAL distinct-key count —
-    the caller's rank-uniqueness check rides on the offsets vector the
-    rank already collects, not a separate count job."""
-    pid = "__sa_rpid"
-    from pyspark.sql import Window
-
-    # persist the rank input FIRST: repartitionByRange's boundary-sample
-    # pass would otherwise recompute the whole upstream join chain once
-    # more per round (the rows are slim — a few longs each)
-    df = df.transform(_persisted)
-    # the tagged frame is CHECKPOINTED, not persisted: spark_partition_id
-    # must evaluate identically in the offsets pass and every later
-    # consumer, and a persist alone cannot guarantee that — when the
-    # output is consumed through a self-join (the _dense_rank_join
-    # join-back), the analyzer's relation deduplication re-assigns the
-    # subtree's expression ids and the cache lookup MISSES, so the range
-    # exchange re-samples its boundaries with the offsets already frozen
-    # from the first sampling (observed: nondeterministically collapsed
-    # ranks, the r10 red invariance pin).  A localCheckpoint freezes
-    # (rows, pid) into an ExistingRDD that every rewrite of the plan
-    # still reads verbatim.  NON-eager: the countDistinct collect below
-    # is the first action, so one job materializes the frozen tagging
-    # AND reads the offsets off it — the determinism guarantee is
-    # unchanged (a single materialization, all consumers read blocks).
-    ranged = (df.repartitionByRange(*[F.col(c) for c in cols])
-              .withColumn(pid, F.spark_partition_id())
-              .transform(_checkpointed, eager=False, level=_CKPT_LEVEL))
-    off, total = partition_offsets(ranged, pid, F.countDistinct(*cols))
-    w = Window.partitionBy(pid).orderBy(*[F.col(c) for c in cols])
-    out = ranged.withColumn(
-        "rank", (F.dense_rank().over(w) - 1 + off).cast("long")).drop(pid)
-    return out, total
-
-
-#: rank-FORM cutoff (tokens): below it the in-place range-partitioned
-#: rank wins clearly (per-round cost is fixed job latency, which the
-#: in-place form minimizes — r9: 30.7 → 15.4 s at sf0.1); above it the
-#: persisted distinct → rank-the-keys → join-back form edges it out in
-#: the r10 same-day 100× A/B (313 s vs 320 s in-place; the literal r8
-#: unpersisted form measured 372 s — see _dense_rank_join) and swaps
-#: the full-corpus range sort for key-partitioned shuffles.  Final
-#: ranks are identical either way (the same dense rank), so the oracle
-#: is form-invariant.
-_RANK_JOIN_CUTOFF = 8_000_000
-
-
-def _dense_rank_join(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
-    """Large-corpus rank form: persist the round's slim pair table,
-    DISTINCT the key tuples, rank the (smaller) key set with the
-    in-place form, equi-join the rank back — key-partitioned shuffles
-    instead of one full-corpus range sort per round.
-
-    Same-day 100× A/B (27.6M tokens, r10 — the honest record): this
-    form 313 s, pure in-place 320 s, the literal r8
-    distinct→ranked()→join-back-without-persist form 372 s.  The r9
-    verdict's 278 s target came from the r8 ROUND's measurement — the
-    delta was cross-round machine drift, not a recoverable plan cost;
-    within a single day the forms are within noise except the
-    unpersisted r8 shape, which recomputes the radix offset joins in
-    its boundary-sampling pass (+18%).  Kept because it measured best
-    and its shuffles are key-partitioned (no corpus-wide range sort
-    under memory pressure).  Same output contract as
-    :func:`_dense_rank`."""
-    df = df.transform(_persisted)
-    keys = df.select(*cols).distinct()
-    ranked_keys, total = _dense_rank(keys, cols)
-    out = df.join(ranked_keys.select(*cols, "rank"), on=cols, how="inner")
-    return out, total
-
-
-def _join_rank_round(df: DataFrame, cols: list[str]) -> tuple[DataFrame, int]:
-    """One large-corpus construction round: :func:`_dense_rank_join`,
-    then the (pos, rank) table materialized in its own checkpoint.  The
-    rank's internal persists and tagged checkpoint die with the round's
-    scope; only the round table — read by the next round and the LCP
-    descent — stays registered."""
-    with _cache.scope():
-        rr, total = _dense_rank_join(df, cols)
-        r = rr.select("pos", "rank").localCheckpoint(
-            eager=True, storageLevel=_CKPT_LEVEL)
-    return _cache.hold(r), total
-
-
 #: rank-table radix: each construction round ranks the tuple of RADIX
 #: previous-round ranks at offsets 0, w, 2w, … (generalized prefix
-#: doubling).  Radix 4 halves the round count vs binary doubling at the
-#: cost of two extra self-joins per round — per-round cost is fixed job
-#: latency + shuffle volume, so the right radix is a function of CORPUS
-#: SIZE: below the cutoff latency dominates and radix 4 wins (sf0.1:
-#: 30.7 → 15.4 s; 10×: 60 → 42 s), above it the join volume dominates
-#: and binary wins (100×/27.6M tokens measured +14% at radix 4).
-#: "auto" resolves from the corpus length the first rank round already
-#: counts.  The FINAL ranks (the suffix array) are radix-invariant —
-#: the suffix order is the same total order — so the binary fixed-round
-#: DuckDB oracle matches hash-exactly either way, and the LCP descent
-#: reads each level's extension count off the actual table widths.
-_RADIX_SMALL, _RADIX_CUTOFF = 4, 8_000_000
+#: doubling).  Radix 4 halves the round count of binary doubling; the
+#: extra neighbours ride the same lead window, so a round still costs
+#: one pairing exchange and one rank (sf0.1: 30.7 → 15.4 s at radix 4).
+#: The FINAL ranks (the suffix array) are radix-invariant — the suffix
+#: order is the same total order — so the binary fixed-round DuckDB
+#: oracle matches hash-exactly, and the LCP descent reads each level's
+#: extension count off the actual table widths.
+_RADIX = 4
+
+#: corpus-size bound (tokens): the round rank key
+#: (r0+1)·(n+2) + (r1+1) of :func:`_dense_rank_bucketed` stays below
+#: 2^63 − 1 up to ~3.03·10⁹ tokens; past that it would overflow a long
+#: (an ANSI arithmetic error mid-construction), so suffix_ranks refuses
+#: up front
+_MAX_TOKENS = 3_000_000_000
 
 
 def suffix_ranks(positions: DataFrame,
-                 radix: int | str = "auto",
                  n: int | None = None) -> list[tuple[int, DataFrame]]:
     """Prefix-doubling rank tables: returns [(width, ranks)] where
     ``ranks`` maps pos → dense rank of the suffix's first ``width``
     symbols; the last table's ranks are UNIQUE (it IS the suffix
-    array: rank == SA index).  Each round is radix−1 offset self-joins
-    plus one scale-safe in-place dense rank; rounds stop as soon as
+    array: rank == SA index).  Each round is one lead-window pairing
+    exchange plus one derived-bucket dense rank; rounds stop as soon as
     ranks are unique (further widening is a fixpoint, so a fixed-round
-    mirror — the oracle — computes identical final ranks)."""
+    mirror — the oracle — computes identical final ranks).  Raises
+    ``ValueError`` for corpora over :data:`_MAX_TOKENS` tokens before
+    any construction job runs."""
     # localCheckpoint per round TRUNCATES THE LINEAGE — the canonical
     # posture for iterative DataFrame algorithms here (dedup_clusters,
     # pagerank, hits): with persist alone each round's plan nests the
     # previous round's, and by round ~8 plan construction itself
-    # (AQE re-planning, tree stringification) dominates or overflows
-    # Memory discipline (the 100x OOM lesson): each round's persists and
-    # rank-internal checkpoints die with the round's cache scope — only
-    # the round's CHECKPOINTED rank table survives (registered for the
-    # caller's scope), because the LCP descent still needs it.
+    # (AQE re-planning, tree stringification) dominates or overflows.
+    # Memory discipline (the 100x OOM lesson): every round table is a
+    # registered checkpoint, released by the caller's cache scope once
+    # the LCP descent has read it.
     # corpus length up front (positions arrives persisted from
-    # maximal_repeats): it picks BOTH the radix and the rank form, and
-    # replaces the old post-round-0 r.count() job — same total jobs.
-    # Callers that already know the length pass it to skip the job.
+    # maximal_repeats): it sizes the pairing blocks and bounds the rank
+    # key, and replaces the old post-round-0 r.count() job.  Callers
+    # that already know the length pass it to skip the job.
     if n is None:
         n = positions.count()
-    if radix == "auto":
-        radix = _RADIX_SMALL if n <= _RADIX_CUTOFF else 2
-    small = n <= _RANK_JOIN_CUTOFF
-    syms = positions.select("pos", "sym")
-    r, n_ranks = (_dense_rank_sym(syms) if small
-                  else _join_rank_round(syms, ["sym"]))
+    if n > _MAX_TOKENS:
+        raise ValueError(
+            f"suffix_ranks: {n} tokens exceeds the {_MAX_TOKENS} bound "
+            "of the long round rank key")
+    r, n_ranks = _dense_rank_sym(positions.select("pos", "sym"))
     out = [(1, r)]
     width = 1
     from pyspark.sql import Window
@@ -462,58 +283,47 @@ def suffix_ranks(positions: DataFrame,
     # over pos order.  Partition the corpus into ~8·cores contiguous
     # pos-blocks; rows in the first (radix−1)·width positions of a block
     # are ALSO emitted to the previous block ("ghosts") so every real
-    # row sees its full lead horizon inside its own partition.  One
-    # exchange replaces the radix−1 offset self-joins (2·(radix−1)
-    # exchanges + sorts) the join form pays per round (guide §2.4).
-    n_blocks = max(8 * par, 1)
-    block = max(-(-n // n_blocks), 1)
+    # row sees its full lead horizon inside its own partition.  A round
+    # whose horizon outgrows the base block widens its block to the
+    # horizon, so a ghost is only ever read by the ONE block before its
+    # own.  One exchange replaces the radix−1 offset self-joins
+    # (2·(radix−1) exchanges + sorts) per round (guide §2.4).
+    base_block = max(-(-n // max(8 * par, 1)), 1)
+    cols = [f"r{i}" for i in range(_RADIX)]
     while n_ranks != n:
-        if width > radix * n:  # safety: cannot exceed corpus length
+        if width > _RADIX * n:  # safety: cannot exceed corpus length
             raise RuntimeError("suffix_ranks: doubling failed to converge")
-        horizon = (radix - 1) * width
-        cols = [f"r{i}" for i in range(radix)]
-        if small and horizon <= block:
-            blk = (F.col("pos") - F.col("pos") % F.lit(block)) / F.lit(block)
-            ghost = ((F.col("pos") % F.lit(block) < F.lit(horizon))
-                     & (F.col("pos") >= F.lit(block)))
-            tagged = r.select(
-                "pos", "rank",
-                F.explode(F.when(ghost, F.array(blk, blk - 1))
-                          .otherwise(F.array(blk))).alias("__sablk"))
-            wlead = Window.partitionBy("__sablk").orderBy("pos")
-            sel = [F.col("pos"), F.col("rank").alias("r0")]
-            for i in range(1, radix):
-                sel.append(F.coalesce(F.lead("rank", i * width).over(wlead),
-                                      F.lit(-1)).alias(f"r{i}"))
-            paired = (tagged.withColumn("__own", blk)
-                      .select(*sel, "__own", "__sablk")
-                      .filter(F.col("__own") == F.col("__sablk"))
-                      .drop("__own", "__sablk"))
-        else:
-            paired = r.select("pos", F.col("rank").alias("r0"))
-            for i in range(1, radix):
-                b = r.select((F.col("pos") - F.lit(i * width)).alias("pos"),
-                             F.col("rank").alias(f"r{i}"))
-                paired = (paired.join(b, "pos", "left")
-                          .withColumn(f"r{i}", F.coalesce(f"r{i}", F.lit(-1))))
-        if small:
-            # rounds past the first have a KNOWN-UNIFORM leading key
-            # (r0 = previous round's dense rank, on [0, n_ranks)): the
-            # bucketed rank derives its partitioning instead of
-            # sampling it, and arrives checkpoint-backed — per-round
-            # sequential job barriers drop from 4 (persist, boundary
-            # sample, countDistinct, checkpoint) to 2 (rank+checkpoint,
-            # bounded per-bucket max collect)
-            r, n_ranks = _dense_rank_bucketed(paired, cols, n_ranks)
-        else:
-            r, n_ranks = _join_rank_round(paired, cols)
-        width *= radix
+        horizon = (_RADIX - 1) * width
+        block = max(base_block, horizon)
+        blk = (F.col("pos") - F.col("pos") % F.lit(block)) / F.lit(block)
+        ghost = ((F.col("pos") % F.lit(block) < F.lit(horizon))
+                 & (F.col("pos") >= F.lit(block)))
+        tagged = r.select(
+            "pos", "rank",
+            F.explode(F.when(ghost, F.array(blk, blk - 1))
+                      .otherwise(F.array(blk))).alias("__sablk"))
+        wlead = Window.partitionBy("__sablk").orderBy("pos")
+        sel = [F.col("pos"), F.col("rank").alias("r0")]
+        for i in range(1, _RADIX):
+            sel.append(F.coalesce(F.lead("rank", i * width).over(wlead),
+                                  F.lit(-1)).alias(f"r{i}"))
+        paired = (tagged.withColumn("__own", blk)
+                  .select(*sel, "__own", "__sablk")
+                  .filter(F.col("__own") == F.col("__sablk"))
+                  .drop("__own", "__sablk"))
+        # rounds past the first have a KNOWN-UNIFORM leading key
+        # (r0 = previous round's dense rank, on [0, n_ranks)): the
+        # bucketed rank derives its partitioning from the key and
+        # arrives checkpoint-backed — two sequential job barriers per
+        # round (rank+checkpoint, bounded per-bucket max collect)
+        r, n_ranks = _dense_rank_bucketed(paired, cols, n_ranks)
+        width *= _RADIX
         out.append((width, r))
     return out
 
 
 def adjacent_lcp(rank_tables: list[tuple[int, DataFrame]],
-                 n: int | None = None) -> DataFrame:
+                 n: int) -> DataFrame:
     """(pos_a, pos_b, lcp) for every ADJACENT suffix-array pair, via the
     sparse-rank descent: for k from the widest half-table down, extend
     the match by ``width`` whenever rank_k agrees at the current
@@ -525,36 +335,30 @@ def adjacent_lcp(rank_tables: list[tuple[int, DataFrame]],
     the last width, and after level k the remainder is < next_width, so
     (next_width/width)−1 tests at width cover every digit value.
 
-    When the caller supplies the corpus length ``n``, the adjacent-pair
-    step is a ``lead`` window over rank-blocks (final ranks are dense
-    and unique on [0, n), so the SA-adjacent suffix is literally the
-    next row in rank order) — one derived-partition exchange instead of
-    the rank+1 self-join's two (guide §2.4)."""
-    final = rank_tables[-1][1]
-    if n is not None:
-        from pyspark.sql import Window
+    ``n`` is the corpus length.  The adjacent-pair step is a ``lead``
+    window over rank-blocks (final ranks are dense and unique on
+    [0, n), so the SA-adjacent suffix is literally the next row in rank
+    order) — one derived-partition exchange instead of a rank+1
+    self-join's two (guide §2.4)."""
+    from pyspark.sql import Window
 
-        par = final.sparkSession.sparkContext.defaultParallelism
-        block = max(-(-n // max(8 * par, 1)), 1)
-        blk = (F.col("rank") - F.col("rank") % F.lit(block)) / F.lit(block)
-        ghost = ((F.col("rank") % F.lit(block) == 0)
-                 & (F.col("rank") >= F.lit(block)))
-        tagged = final.select(
-            "pos", "rank",
-            F.explode(F.when(ghost, F.array(blk, blk - 1))
-                      .otherwise(F.array(blk))).alias("__lab"))
-        wl = Window.partitionBy("__lab").orderBy("rank")
-        adj = (tagged.withColumn("__nxt", F.lead("pos", 1).over(wl))
-               .withColumn("__own", blk)
-               .filter((F.col("__own") == F.col("__lab"))
-                       & F.col("__nxt").isNotNull())
-               .select(F.col("pos").alias("pos_a"),
-                       F.col("__nxt").alias("pos_b")))
-    else:
-        b = final.select(F.col("pos").alias("pos_b"),
-                         F.col("rank").alias("__rb"))
-        adj = (final.join(b, F.col("__rb") == F.col("rank") + F.lit(1))
-               .select(F.col("pos").alias("pos_a"), "pos_b"))
+    final = rank_tables[-1][1]
+    par = final.sparkSession.sparkContext.defaultParallelism
+    block = max(-(-n // max(8 * par, 1)), 1)
+    blk = (F.col("rank") - F.col("rank") % F.lit(block)) / F.lit(block)
+    ghost = ((F.col("rank") % F.lit(block) == 0)
+             & (F.col("rank") >= F.lit(block)))
+    tagged = final.select(
+        "pos", "rank",
+        F.explode(F.when(ghost, F.array(blk, blk - 1))
+                  .otherwise(F.array(blk))).alias("__lab"))
+    wl = Window.partitionBy("__lab").orderBy("rank")
+    adj = (tagged.withColumn("__nxt", F.lead("pos", 1).over(wl))
+           .withColumn("__own", blk)
+           .filter((F.col("__own") == F.col("__lab"))
+                   & F.col("__nxt").isNotNull())
+           .select(F.col("pos").alias("pos_a"),
+                   F.col("__nxt").alias("pos_b")))
     # non-eager: the first descent level's eager checkpoint computes (and
     # thereby materializes) this frame in its own job — no separate
     # materialization job; free_ckpt(prev) runs only after that job.
@@ -609,28 +413,16 @@ def maximal_repeats(docs: DataFrame, id_col: str, text_col: str,
     tokenization."""
     from pyspark.sql import Window
 
-    # the no-AQE region covers ONLY the construction rounds (windows +
-    # checkpoints over derived partitionings, where AQE's per-exchange
-    # job barriers dominate and its re-planning has nothing to decide).
-    # The LCP descent and the finish joins run WITH AQE: their join
-    # strategy is a genuine runtime decision — rank tables broadcast at
-    # bench scale but must flip to partitioned joins once they outgrow
-    # the threshold at corpus scale (the forced-SMJ form was measured
-    # 7× slower in-suite at sf0.1).
-    spark = docs.sparkSession
-    with _no_aqe(spark):
-        positions = pack_positions(docs, id_col, text_col) \
-            .transform(_persisted)
-        n = positions.count()
+    positions = pack_positions(docs, id_col, text_col) \
+        .transform(_persisted)
+    n = positions.count()
     # the descent output is checkpointed, so the rank tables' blocks are
     # dead weight once it exists — they die with this scope (the 100x
     # OOM lesson: ~log(L) corpus-sized tables × multiple bench passes
     # otherwise accumulate until the heap gives out).  positions and the
     # descent output outlive it: the returned plan reads both.
     with _cache.scope():
-        with _no_aqe(spark):
-            _set_region_partitions(spark, n)
-            tables = suffix_ranks(positions, n=n)
+        tables = suffix_ranks(positions, n=n)
         d_final = adjacent_lcp(tables, n=n)
     _cache.hold(d_final)
     d = d_final.filter(F.col("lcp") >= F.lit(min_len))

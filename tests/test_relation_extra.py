@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pigpen_spark.relation import return_
+from pigpen_spark.session import set_options
 from pigpen_spark.sources import io as pio
 
 
@@ -65,7 +66,7 @@ def test_store_bucketed_join_no_exchange(spark, tmp_path):
     dim = return_(spark, [(i, f"n{i}") for i in range(100)], "id long, name string")
     big.store_bucketed("t_big", ["id"], 4, sort_by=["id"], path=str(tmp_path / "t_big"))
     dim.store_bucketed("t_dim", ["id"], 4, sort_by=["id"], path=str(tmp_path / "t_dim"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    set_options(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
     try:
         j = spark.table("t_big").join(spark.table("t_dim"), "id")
         plan = j._jdf.queryExecution().executedPlan().toString()
@@ -73,7 +74,7 @@ def test_store_bucketed_join_no_exchange(spark, tmp_path):
         # bucketed co-located join: no shuffle exchange on either side
         assert "Exchange hashpartitioning" not in plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        set_options(spark, {"spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024)})
         spark.sql("DROP TABLE IF EXISTS t_big")
         spark.sql("DROP TABLE IF EXISTS t_dim")
 

@@ -247,22 +247,6 @@ class TestGenerateScriptNamespaces:
         assert "non_idempotent" in stdout
 
 
-class TestSuffixRankFormInvariance:
-    """Two-form suffix-array rank (VERDICT r9 #2): in-place below the
-    token cutoff, distinct+join-back above — final ranks and repeats
-    must be identical either way."""
-
-    def test_join_form_identical_repeats(self, spark, monkeypatch):
-        from pigpen_spark.functions import suffix as X
-        docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-                .limit(120))
-        small = X.maximal_repeats(docs, "doc_id", "text", min_len=6).collect()
-        monkeypatch.setattr(X, "_RANK_JOIN_CUTOFF", 0)  # force the join form
-        large = X.maximal_repeats(docs, "doc_id", "text", min_len=6).collect()
-        assert len(small) > 0
-        assert sorted(map(tuple, small)) == sorted(map(tuple, large))
-
-
 class TestIvfPqIndexStream:
     """Streaming IVF-PQ maintenance (VERDICT r9 #4): streamed inverted
     lists == one-shot build under the seeded quantizers, the streamed
@@ -1394,44 +1378,76 @@ class TestBlendByWeight:
 
 
 class TestSuffixDerivedPartitioning:
-    """Round-10 optimization pins: the suffix array's derived-bucket
-    rank forms (sym buckets for round 0, (r0, r1) composite buckets for
-    later rounds) and the lead-window pairing must produce EXACTLY the
-    repeats the sampled-range + offset-self-join forms produce — the
-    dense ranks are the same total order either way."""
+    """The suffix array's one construction form: derived-bucket ranks
+    (sym buckets for round 0, (r0, r1) composite buckets for later
+    rounds) over lead-window pairing, at radix 4 — checked against the
+    DuckDB reference and pinned join-free in every round."""
 
-    def test_derived_forms_equal_sampled_join_forms(self, spark, monkeypatch):
-        from pigpen_spark.functions import suffix as X
-        docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-                .limit(120))
-        fast = X.maximal_repeats(docs, "doc_id", "text", min_len=6).collect()
-        # force the large-corpus path everywhere: sampled range ranks,
-        # distinct+join-back, offset self-joins (no lead pairing)
-        monkeypatch.setattr(X, "_RANK_JOIN_CUTOFF", 0)
-        monkeypatch.setattr(X, "_RADIX_CUTOFF", 0)
-        slow = X.maximal_repeats(docs, "doc_id", "text", min_len=6).collect()
-        assert len(fast) > 0
-        assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
+    def _docs(self, spark, sf_dir, limit=120):
+        rows = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+                .select("doc_id", "text").orderBy("doc_id").limit(limit)
+                .collect())
+        return [(int(r.doc_id), r.text) for r in rows]
 
-    def test_lead_pairing_exercised_then_falls_back(self, spark):
-        """At 120 sf0.001 docs the early rounds satisfy horizon <= block
-        (lead pairing) and later rounds exceed it (join fallback) — pin
-        that BOTH code paths run in one build by checking the round
-        widths actually produced."""
+    def test_repeats_equal_duckdb_reference(self, spark, sf_dir):
+        import duckdb
+        import pandas as pd
+
         from pigpen_spark.functions import suffix as X
-        docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-                .limit(120))
-        with X._no_aqe(spark):
-            positions = X.pack_positions(docs, "doc_id", "text")
-            positions = positions.persist()
+        rows = self._docs(spark, sf_dir)
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = sorted(tuple(r) for r in X.maximal_repeats(
+            docs, "doc_id", "text", min_len=6).collect())
+        con = duckdb.connect()
+        con.register("documents",
+                     pd.DataFrame(rows, columns=["doc_id", "text"]))
+        want = sorted(tuple(int(x) for x in r) for r in con.execute(
+            X.maximal_repeats_sql("documents", "doc_id", "text",
+                                  min_len=6)).fetchall())
+        assert len(got) > 0
+        assert got == want
+
+    def test_round_tables_pair_without_joins(self, spark, sf_dir,
+                                             monkeypatch):
+        """Every round's rank input is paired by the lead window — no
+        join in its plan — including rounds whose horizon outgrows the
+        base pos-block (the block widens to the horizon instead)."""
+        from pigpen_spark import cache
+        from pigpen_spark.functions import suffix as X
+        # 40 docs: the early horizons fit the base block, the last
+        # rounds' horizons outgrow it
+        docs = spark.createDataFrame(self._docs(spark, sf_dir, limit=40),
+                                     "doc_id long, text string")
+        seen = []
+        real = X._dense_rank_bucketed
+
+        def spy(df, cols, n_prev):
+            seen.append(df._jdf.queryExecution().optimizedPlan().toString())
+            return real(df, cols, n_prev)
+
+        monkeypatch.setattr(X, "_dense_rank_bucketed", spy)
+        with cache.scope():
+            positions = X.pack_positions(docs, "doc_id", "text") \
+                .transform(cache.persisted)
             n = positions.count()
             tables = X.suffix_ranks(positions, n=n)
-        par = spark.sparkContext.defaultParallelism
-        block = max(-(-n // max(8 * par, 1)), 1)
-        horizons = [3 * w for w, _ in tables[:-1]]  # radix 4 small form
-        assert any(h <= block for h in horizons), "lead path never ran"
-        # final table is a permutation: dense unique ranks == positions
-        final = tables[-1][1]
-        got = final.agg(F.countDistinct("rank").alias("c")).collect()[0]["c"]
-        assert got == n
-        positions.unpersist()
+            par = spark.sparkContext.defaultParallelism
+            base_block = max(-(-n // max(8 * par, 1)), 1)
+            horizons = [(X._RADIX - 1) * w for w, _ in tables[:-1]]
+            assert len(seen) == len(horizons) > 0
+            assert any(h <= base_block for h in horizons) and \
+                any(h > base_block for h in horizons), \
+                (n, base_block, horizons)
+            for plan in seen:
+                assert "Join" not in plan, plan
+            # final table is a permutation: dense unique ranks == positions
+            final = tables[-1][1]
+            got = final.agg(F.countDistinct("rank").alias("c")).collect()[0]
+            assert got["c"] == n
+
+    def test_refuses_corpus_past_rank_key_bound(self, spark):
+        from pigpen_spark.functions import suffix as X
+        positions = spark.createDataFrame([(0, 5), (1, -1)],
+                                          "pos long, sym long")
+        with pytest.raises(ValueError, match="3000000000"):
+            X.suffix_ranks(positions, n=3_000_000_001)

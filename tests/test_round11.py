@@ -1,11 +1,13 @@
 """Round-11 optimization pins, and the two-phase offset contract.
 
-The r10 regression root-cause and its guard rails:
+The r10 regression root-cause and its guard rails (the sampled rank
+forms named here have since been replaced by the derived-bucket
+`_dense_rank_via` forms, which the same consistency pins now cover):
 
-- `_dense_rank`'s two-phase rank tagged rows with `spark_partition_id()`
+- the sampled two-phase rank tagged rows with `spark_partition_id()`
   under a persist, and the offsets pass + output pass were assumed to
   read the same cache.  When the output is consumed through a SELF-JOIN
-  (`_dense_rank_join`'s join-back), the analyzer's relation
+  (the distinct-then-join-back rank), the analyzer's relation
   deduplication re-assigns the subtree's expression ids, the cache
   lookup misses, and the range exchange re-samples its boundaries with
   the offsets frozen from the first sampling — nondeterministically
@@ -24,9 +26,10 @@ from pyspark.sql import functions as F
 
 
 class TestDenseRankSelfJoinConsistency:
-    """The exact r10 failure shape: rank a distinct key set, join the
-    ranks back onto the full table, and REPEAT — every materialization
-    must agree with the single-threaded ground truth."""
+    """The exact r10 failure shape, on the surviving derived-bucket rank
+    forms: rank, consume the ranks through a SELF-JOIN and again after
+    ``clearCache()``, and REPEAT — every materialization must agree with
+    the single-threaded ground truth."""
 
     def _paired(self, spark, n=5000, seed=7):
         import random
@@ -37,34 +40,54 @@ class TestDenseRankSelfJoinConsistency:
         return spark.createDataFrame(
             rows, "pos long, r0 long, r1 long, r2 long, r3 long")
 
+    @staticmethod
+    def _check(spark, out, truth):
+        """Ranks read through a self-join (each pos with its successor's
+        rank), then again after clearCache(), must equal ``truth``."""
+        nxt = out.select((F.col("pos") - 1).alias("pos"),
+                         F.col("rank").alias("nrank"))
+        for _ in range(2):
+            got = {r.pos: (r.rank, r.nrank) for r in
+                   out.join(nxt, "pos", "left").collect()}
+            assert len(got) == len(truth)
+            bad = [(p, rk) for p, rk in got.items()
+                   if rk != (truth[p], truth.get(p + 1))]
+            assert not bad, f"{len(bad)} wrong ranks, first {bad[:3]}"
+            spark.catalog.clearCache()
+
     def test_join_back_matches_ground_truth_repeatedly(self, spark):
+        from pigpen_spark import cache
         from pigpen_spark.functions import suffix as X
         cols = ["r0", "r1", "r2", "r3"]
-        df = self._paired(spark).persist()
+        df = self._paired(spark)
         base = df.collect()
         tuples = sorted(set((r.r0, r.r1, r.r2, r.r3) for r in base))
-        truth = {t: i for i, t in enumerate(tuples)}
-        for trial in range(3):
-            out, total = X._dense_rank_join(df, cols)
-            assert total == len(tuples)
-            got = out.select("pos", *cols, "rank").collect()
-            assert len(got) == len(base)
-            bad = [r for r in got
-                   if r.rank != truth[(r.r0, r.r1, r.r2, r.r3)]]
-            assert not bad, f"trial {trial}: {len(bad)} wrong ranks, " \
-                            f"first {bad[:3]}"
-        df.unpersist()
+        rank_of = {t: i for i, t in enumerate(tuples)}
+        truth = {r.pos: rank_of[(r.r0, r.r1, r.r2, r.r3)] for r in base}
+        for _ in range(3):
+            with cache.scope():
+                out, total = X._dense_rank_bucketed(df, cols, 97)
+                assert total == len(tuples)
+                self._check(spark, out, truth)
 
     def test_dense_rank_tagged_frame_is_checkpoint_backed(self, spark):
-        """The tagged (pid) frame must be an ExistingRDD — a persist
-        alone is what made the r10 join-back nondeterministic."""
+        """The round-0 symbol rank must come back as an ExistingRDD (a
+        persist alone is what made the r10 join-back nondeterministic)
+        and survive a self-join and clearCache()."""
+        from pigpen_spark import cache
         from pigpen_spark.functions import suffix as X
-        keys = spark.range(200).select(
-            (F.col("id") % 50).alias("k")).distinct()
-        out, total = X._dense_rank(keys, ["k"])
-        assert total == 50
-        plan = out._jdf.queryExecution().analyzed().toString()
-        assert "LogicalRDD" in plan or "ExistingRDD" in plan
+        syms = spark.range(2000).select(
+            F.col("id").alias("pos"),
+            ((F.col("id") * 7919) % 50 * 85_000_000 - 3).alias("sym"))
+        base = syms.collect()
+        order = sorted(set(r.sym for r in base))
+        truth = {r.pos: order.index(r.sym) for r in base}
+        with cache.scope():
+            out, total = X._dense_rank_sym(syms)
+            assert total == 50
+            plan = out._jdf.queryExecution().analyzed().toString()
+            assert "LogicalRDD" in plan or "ExistingRDD" in plan
+            self._check(spark, out, truth)
 
 
 class TestSuffixCheckpointRelease:

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pigpen_spark.session import set_options
+
 
 class TestTakeBudgetNullSize:
     def test_null_size_raises_loudly(self, spark):
@@ -147,7 +149,7 @@ class TestGroupStream:
         from pigpen_spark.relation import Relation
 
         old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        set_options(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "2048"})
         try:
             df = (spark.range(200_000)
                   .select(F.lit(1).alias("k"), F.col("id").alias("v")))
@@ -177,7 +179,7 @@ class TestGroupStream:
             assert r["s"] == 200_000 * 199_999 // 2
             assert 0 < r["max_chunk"] <= 2048
         finally:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+            set_options(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": old})
 
     def test_matches_groupby_agg_many_groups(self, spark):
         from pigpen_spark.relation import Relation

@@ -342,22 +342,6 @@ class TestPqIndexStream:
         assert hits.count() == 9
 
 
-class TestSuffixRadixInvariance:
-    """The suffix array's construction radix (auto: 4 small / 2 large)
-    must not change results — final ranks are the same total order and
-    the descent reads extension counts off the table widths."""
-
-    def test_radix2_and_radix4_identical_repeats(self, spark, monkeypatch):
-        from pigpen_spark.functions import suffix as X
-        docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-                .limit(120))
-        r4 = X.maximal_repeats(docs, "doc_id", "text", min_len=6).collect()
-        monkeypatch.setattr(X, "_RADIX_CUTOFF", 0)   # force the binary path
-        r2 = X.maximal_repeats(docs, "doc_id", "text", min_len=6).collect()
-        assert len(r4) > 0
-        assert sorted(map(tuple, r4)) == sorted(map(tuple, r2))
-
-
 class TestMixPlan:
     """mix_plan: integer mixture worksheet — rates cap at the epoch
     limit, deficits appear exactly when the cap binds, drops and

@@ -49,20 +49,36 @@ def test_ann_ivf_pq_is_cogrouped_adc(plans):
 
 
 def test_maximal_repeats_rank_has_no_join_back(spark, sf_dir):
-    # the in-place dense rank: one range exchange feeding a partitioned
-    # window — the round-8 form's rank-attach JOIN is gone (each round's
-    # plan had a distinct + join-back; now rank rides the ranged rows).
-    # Since r11 the range-partitioned tagged frame is FROZEN by an eager
-    # localCheckpoint (the offsets pass and every consumer must read the
-    # same spark_partition_id tagging — the r10 self-join lesson), so the
-    # executed plan of the returned frame reads an ExistingRDD; the range
-    # exchange ran inside the checkpoint materialization.
+    # the derived-bucket dense rank: one exchange on a bucket computed
+    # from the key feeding a partitioned window — no rank-attach JOIN
+    # (the round-8 form's distinct + join-back is gone).  The ranked
+    # frame is frozen by a NON-eager localCheckpoint that the per-bucket
+    # offsets collect materializes, so the executed plan of the returned
+    # frame reads an ExistingRDD; the exchange ran inside that job.
+    from pigpen_spark import cache
     from pigpen_spark.functions import suffix as X
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    pos = X.pack_positions(docs, "doc_id", "text")
-    ranked, n = X._dense_rank(pos.select("pos", "sym"), ["sym"])
-    p = ranked._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in p
-    assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p
-    assert n > 0
+    with cache.scope():
+        pos = X.pack_positions(docs, "doc_id", "text").select("pos", "sym") \
+            .transform(cache.persisted)
+        ranked, n = X._dense_rank_sym(pos)
+        p = ranked._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in p
+        assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p
+        # ranks read through a self-join and after clearCache() equal
+        # the Python dense rank of the symbols
+        base = pos.collect()
+        order = {s: i for i, s in enumerate(sorted({r.sym for r in base}))}
+        assert n == len(order)
+        nxt = ranked.select((F.col("pos") - 1).alias("pos"),
+                            F.col("rank").alias("nrank"))
+        sym_at = {r.pos: r.sym for r in base}
+        for _ in range(2):
+            got = ranked.join(nxt, "pos", "left").collect()
+            assert len(got) == len(base)
+            for r in got:
+                assert r.rank == order[sym_at[r.pos]]
+                assert r.nrank == (order[sym_at[r.pos + 1]]
+                                   if r.pos + 1 in sym_at else None)
+            spark.catalog.clearCache()

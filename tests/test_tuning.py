@@ -2,6 +2,7 @@
 
 from pigpen_spark import tuning
 from pigpen_spark.relation import return_
+from pigpen_spark.session import set_options
 
 
 def test_estimate_shuffle_partitions_scales():
@@ -25,7 +26,7 @@ def test_configure_for_input_sets_conf(spark):
         assert int(out["spark.sql.shuffle.partitions"]) == tuning.MAX_SHUFFLE_PARTITIONS
         assert spark.conf.get("spark.sql.shuffle.partitions") == out["spark.sql.shuffle.partitions"]
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+        set_options(spark, {"spark.sql.shuffle.partitions": before})
 
 
 def test_auto_configure_roundtrip(spark):
@@ -35,7 +36,7 @@ def test_auto_configure_roundtrip(spark):
         out = tuning.auto_configure(spark, r.df)
         assert int(out["spark.sql.shuffle.partitions"]) >= 1
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+        set_options(spark, {"spark.sql.shuffle.partitions": before})
 
 
 def test_skew_report_finds_hot_key(spark):

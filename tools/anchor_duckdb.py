@@ -13,11 +13,13 @@ the price of the horizontal-scale execution model DuckDB doesn't have.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pigpen_spark.catalog import TABLES  # noqa: E402
 from pigpen_spark.session import get_spark  # noqa: E402

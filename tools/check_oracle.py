@@ -12,10 +12,12 @@ from __future__ import annotations
 import hashlib
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pigpen_spark.catalog import TABLES  # noqa: E402
 from pigpen_spark.session import get_spark  # noqa: E402

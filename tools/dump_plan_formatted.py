@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pigpen_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402

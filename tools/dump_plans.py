@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pigpen_spark.session import get_spark  # noqa: E402
 from pigpen_spark import catalog, catalog_ext  # noqa: E402,F401
@@ -57,7 +59,7 @@ def main() -> None:
             lines.append(f"... ({len(plan.splitlines()) - 40} more lines)")
         lines.append("```")
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote PLANS.md for {len(HEADLINE)} queries")
 

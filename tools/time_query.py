@@ -10,9 +10,11 @@ count() consume for comparison.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pigpen_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402

@@ -16,10 +16,12 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pigpen_spark.catalog import TABLES  # noqa: E402
 
