@@ -1,19 +1,20 @@
 """Multimodal columns: image/audio/video as binary columns with REAL
-decode paths for PNG and PCM-WAV.
+codecs for every payload format the operators emit or read.
 
-The Spark-side machinery — schemas, Arrow-batched ``mapInPandas`` decode
-pipelines, partition sizing — is real and tested, and so are the PNG and
-WAV/GIF/baseline-JPEG codecs (:mod:`pigpen_spark.functions.codecs`,
-pure zlib/struct/numpy implementations of the public specs):
-``image_stats`` / ``image_thumbnail`` / ``audio_features_wav`` /
-``frame_sample_gif`` decode actual bytes to actual numbers,
-oracle-checked end to end — JPEG via the lossless block-constant
-subspace (see codecs.jpeg_encode), and mp4 frame decode for MJPEG
-tracks (``frame_sample_mp4``: real stsc/stco/stsz demux + the baseline
-JPEG decoder per sample).  Only inter-frame video codecs (H.264/HEVC/
-VP9) and exotic image formats remain import-guarded stubs;
-``decode_image_meta`` falls back to a deterministic fake for
-unrecognized payloads.
+Every payload operator — the ``synth_*`` generators, the decoders and
+profilers, the frame samplers and the fused synth→decode twins — runs
+through ONE Arrow batch loop, :func:`_map_rows`: a per-row function over
+(id[, payload bytes]) inside a single ``mapInPandas``.  The codecs
+(:mod:`pigpen_spark.functions.codecs`) are pure zlib/struct/numpy
+implementations of the public specs: PNG, baseline/progressive JPEG,
+GIF, BMP and PCM-WAV decode to actual numbers; mp4, AVI and Matroska
+demux MJPEG (AVI also raw-DIB) frames; mp4/WebM, MP3, Ogg, FLAC and
+ADTS AAC profile at header speed — all oracle-checked end to end
+(JPEG via the lossless block-constant subspace, see codecs.jpeg_encode).
+Only inter-frame video codecs (H.264/HEVC/VP9) and exotic formats
+remain stubs (``frame_sample`` / ``audio_features``, behind
+``allow_stub``); ``decode_image_meta`` falls back to a deterministic
+fake for unrecognized payloads.
 
 At 100 TB: binary payloads ride in parquet binary columns (or are loaded
 via ``spark.read.format("binaryFile")`` for raw object stores); decode
@@ -27,13 +28,53 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pigpen_spark.functions import codecs as C
 
 #: Output schema of the image-metadata decode step.
 IMAGE_META_SCHEMA = (
     "id long, n_bytes long, digest string, width int, height int, format string"
 )
+
+
+def _map_rows(src: DataFrame, row_fn, schema: str) -> DataFrame:
+    """The one Arrow batch loop behind every payload operator.  ``src``
+    holds ``id`` and optionally ``payload``; each row calls
+    ``row_fn(id)`` or ``row_fn(id, payload_bytes)``, which returns one
+    output row (a dict) or several (a list of dicts), and each Arrow
+    batch comes back as one pandas frame of ``schema`` — per-batch
+    Python cost is amortized over thousands of rows."""
+    has_payload = "payload" in src.columns
+
+    def work(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            if has_payload:
+                outs = (row_fn(int(rid), bytes(payload))
+                        for rid, payload in zip(pdf["id"], pdf["payload"]))
+            else:
+                outs = (row_fn(int(rid)) for rid in pdf["id"])
+            rows: list = []
+            for out in outs:
+                if isinstance(out, list):
+                    rows.extend(out)
+                else:
+                    rows.append(out)
+            yield pd.DataFrame(rows)
+
+    return src.mapInPandas(work, schema=schema)
+
+
+def _ids(df: DataFrame, id_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("id"))
+
+
+def _payloads(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
 
 
 def attach_binary_payload(df: DataFrame, src_col: str, out_col: str = "payload") -> DataFrame:
@@ -73,54 +114,55 @@ def decode_image_meta(df: DataFrame, id_col: str, payload_col: str = "payload") 
     except ImportError:
         real = False
 
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _image_meta_row(i, b, real), IMAGE_META_SCHEMA)
 
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
 
-        from pigpen_spark.functions import codecs as C
+def _image_header(data: bytes) -> tuple[int, int, str] | None:
+    """REAL magic-byte header sniff shared by :func:`decode_image_meta`
+    and the image-triage fixture: (width, height, format) for
+    png/jpeg/gif/bmp, None for any other magic; truncated headers raise
+    ValueError."""
+    if data[:8] == b"\x89PNG\r\n\x1a\n":
+        # pure-stdlib IHDR parse (codecs.png_meta)
+        w, h, _depth, _color = C.png_meta(data)
+        return w, h, "png"
+    if data[:2] == b"\xFF\xD8":
+        # SOFn header parse — works for progressive streams the full
+        # decoder refuses
+        w, h, _nc = C.jpeg_meta(data)
+        return w, h, "jpeg"
+    if data[:4] == b"GIF8":
+        # logical-screen descriptor + frame count (codecs.gif_meta walks
+        # the block chain)
+        w, h, _nf = C.gif_meta(data)
+        return w, h, "gif"
+    if data[:2] == b"BM":
+        # BITMAPINFOHEADER parse
+        w, h, _bpp = C.bmp_meta(data)
+        return w, h, "bmp"
+    return None
 
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf["id"], pdf["payload"]):
-                data = bytes(payload)
-                try:
-                    if data[:8] == b"\x89PNG\r\n\x1a\n":
-                        # REAL path: pure-stdlib IHDR parse (codecs.png_meta)
-                        w, h, _depth, _color = C.png_meta(data)
-                        fmt = "png"
-                    elif data[:2] == b"\xFF\xD8":
-                        # REAL path: SOFn header parse — works for
-                        # progressive streams the full decoder refuses
-                        w, h, _nc = C.jpeg_meta(data)
-                        fmt = "jpeg"
-                    elif data[:4] in (b"GIF8",):
-                        # REAL path: logical-screen descriptor + frame
-                        # count (codecs.gif_meta walks the block chain)
-                        w, h, _nf = C.gif_meta(data)
-                        fmt = "gif"
-                    elif data[:2] == b"BM":
-                        # REAL path: BITMAPINFOHEADER parse
-                        w, h, _bpp = C.bmp_meta(data)
-                        fmt = "bmp"
-                    elif real:  # pragma: no cover
-                        raise NotImplementedError(
-                            "PIL decode path: wire Image.open(BytesIO(data))")
-                    else:
-                        w, h, fmt = _fake_decode(data)
-                except ValueError:
-                    # corrupt/truncated payload: metadata profiling must
-                    # quarantine the row, not kill the Arrow batch
-                    w, h, fmt = -1, -1, "corrupt"
-                rows.append({
-                    "id": int(rid),
-                    "n_bytes": len(data),
-                    "digest": hashlib.md5(data).hexdigest(),
-                    "width": w, "height": h, "format": fmt,
-                })
-            yield pd.DataFrame(rows)
 
-    return src.mapInPandas(decode, schema=IMAGE_META_SCHEMA)
+def _image_meta_row(rid: int, data: bytes, real: bool) -> dict:
+    try:
+        meta = _image_header(data)
+        if meta is None:
+            if real:  # pragma: no cover
+                raise NotImplementedError(
+                    "PIL decode path: wire Image.open(BytesIO(data))")
+            meta = _fake_decode(data)
+        w, h, fmt = meta
+    except ValueError:
+        # corrupt/truncated payload: metadata profiling must quarantine
+        # the row, not kill the Arrow batch
+        w, h, fmt = -1, -1, "corrupt"
+    return {
+        "id": rid,
+        "n_bytes": len(data),
+        "digest": hashlib.md5(data).hexdigest(),
+        "width": w, "height": h, "format": fmt,
+    }
 
 
 def frame_sample(df: DataFrame, id_col: str, payload_col: str = "payload",
@@ -191,7 +233,7 @@ def audio_features(df: DataFrame, id_col: str, payload_col: str = "payload",
 # The container has no PIL/librosa/av, but PNG, baseline JPEG, GIF and
 # PCM-WAV are decodable from spec with zlib/struct/numpy (codecs.py), so
 # the operators below are REAL end-to-end: bytes in, decoded numbers
-# out, Arrow-batched through mapInPandas.  Container HEADERS parse for
+# out, Arrow-batched through ``_map_rows``.  Container HEADERS parse for
 # real across mp4 (box walk), AVI (RIFF) and WebM (EBML), and MJPEG
 # tracks decode fully; only inter-frame codecs (H.264/HEVC/VP9/AV1)
 # genuinely need external libraries and keep the frame_sample stub.
@@ -213,10 +255,6 @@ AUDIO_SCHEMA = (
 
 
 def _png_payload(i: int) -> bytes:
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     w, h, a = 8 + i % 16, 8 + (i // 3) % 16, i % 200
     x = np.arange(w)[None, :, None]
     y = np.arange(h)[:, None, None]
@@ -226,10 +264,6 @@ def _png_payload(i: int) -> bytes:
 
 
 def _wav_payload(i: int, constant: bool = False) -> bytes:
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     n = 100 + i % 50
     base = (i % 100) * 10
     ramp = 0 if constant else (np.arange(n) % 50)
@@ -238,10 +272,6 @@ def _wav_payload(i: int, constant: bool = False) -> bytes:
 
 
 def _gif_payload(i: int) -> bytes:
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     w, h, a = 6 + i % 8, 6 + (i // 2) % 8, i % 200
     x = np.arange(w)[None, :]
     y = np.arange(h)[:, None]
@@ -249,15 +279,16 @@ def _gif_payload(i: int) -> bytes:
     return C.gif_encode(frames)
 
 
-def _jpeg_payload(i: int) -> bytes:
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
-    bw, bh, a = 1 + i % 3, 1 + (i // 2) % 3, i % 200
+def _block_image(bw: int, bh: int, a: int) -> np.ndarray:
+    """bh × bw grayscale 8x8 blocks, block (bx, by) constant at a + bx +
+    by: all-zero AC and integer DC at quant 1, JPEG's lossless subspace."""
     blocks = a + np.arange(bw)[None, :] + np.arange(bh)[:, None]
-    img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(np.uint8)
-    return C.jpeg_encode(img)
+    return np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(np.uint8)
+
+
+def _jpeg_payload(i: int) -> bytes:
+    bw, bh, a = 1 + i % 3, 1 + (i // 2) % 3, i % 200
+    return C.jpeg_encode(_block_image(bw, bh, a))
 
 
 def _jpeg_payload_progressive(i: int) -> bytes:
@@ -267,19 +298,11 @@ def _jpeg_payload_progressive(i: int) -> bytes:
     coefficients, so the closed-form pixel sums are the same and any
     progressive-path bug (EOBRUN, correction bits, point transforms)
     breaks the oracle hash."""
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     bw, bh, a = 1 + i % 3, 1 + (i // 2) % 3, i % 200
-    blocks = a + np.arange(bw)[None, :] + np.arange(bh)[:, None]
-    img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(np.uint8)
-    return C.jpeg_encode_progressive(img)
+    return C.jpeg_encode_progressive(_block_image(bw, bh, a))
 
 
 def _mp4_payload(i: int) -> bytes:
-    from pigpen_spark.functions import codecs as C
-
     dur = 10_000 + (i * 37) % 50_000
     return C.mp4_encode_skeleton(dur, [
         {"handler": "vide", "codec": "avc1" if i % 2 == 0 else "hev1",
@@ -291,8 +314,6 @@ def _mp4_payload(i: int) -> bytes:
 
 
 def _image_stats_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     # format sniff: PNG signature vs JPEG SOI — both REAL decoders
     if data[:2] == b"\xFF\xD8":
         arr = C.jpeg_decode(data)
@@ -307,11 +328,19 @@ def _image_stats_row(rid: int, data: bytes) -> dict:
     }
 
 
+def _thumbnail_row(rid: int, data: bytes, factor: int) -> dict:
+    arr = C.png_decode(data)[::factor, ::factor]
+    return {
+        "id": rid,
+        "t_width": arr.shape[1], "t_height": arr.shape[0],
+        "t_px_sum": int(arr.sum(dtype="int64")),
+        "thumb": C.png_encode(arr),
+    }
+
+
 def _thumb_row(rid: int, data: bytes, factor: int) -> dict:
     """decode → ÷factor subsample → re-encode → decode AGAIN: the pixel
     sum must survive the full loop byte-exactly."""
-    from pigpen_spark.functions import codecs as C
-
     arr = C.png_decode(data)[::factor, ::factor]
     again = C.png_decode(C.png_encode(arr))
     return {
@@ -322,8 +351,6 @@ def _thumb_row(rid: int, data: bytes, factor: int) -> dict:
 
 
 def _audio_stats_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     rate, samples = C.wav_decode(data)
     n = samples.shape[0]
     return {
@@ -337,10 +364,6 @@ def _audio_stats_row(rid: int, data: bytes) -> dict:
 
 
 def _downsample_row(rid: int, data: bytes, factor: int, antialias: bool) -> dict:
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     rate, samples = C.wav_decode(data)
     mono = samples.astype(np.int64).sum(axis=1) // samples.shape[1]
     if antialias:
@@ -355,10 +378,10 @@ def _downsample_row(rid: int, data: bytes, factor: int, antialias: bool) -> dict
     }
 
 
-def _frame_rows(rid: int, data: bytes, every_n: int) -> list[dict]:
-    from pigpen_spark.functions import codecs as C
-
-    _w, _h, frames = C.gif_decode(data)
+def _frame_rows(rid: int, data: bytes, every_n: int, demux) -> list[dict]:
+    """(id, frame_index, f_px_sum) for every ``every_n``-th frame that
+    ``demux(data) -> (width, height, frames)`` decodes."""
+    _w, _h, frames = demux(data)
     return [
         {"id": rid, "frame_index": f,
          "f_px_sum": int(frames[f].sum(dtype="int64"))}
@@ -367,8 +390,6 @@ def _frame_rows(rid: int, data: bytes, every_n: int) -> list[dict]:
 
 
 def _video_meta_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     try:
         # container sniff: EBML magic → Matroska/WebM walk, else ISO-BMFF
         m = (C.webm_meta(data) if data[:4] == b"\x1aE\xdf\xa3"
@@ -395,18 +416,9 @@ def synth_png(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame
     downstream pixel sums have CLOSED FORMS an SQL oracle can compute
     without decoding.  Alternating scanline filter (None/Up by parity)
     exercises both encoder paths."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _png_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _png_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def image_stats(df: DataFrame, id_col: str, payload_col: str = "payload") -> DataFrame:
@@ -415,18 +427,8 @@ def image_stats(df: DataFrame, id_col: str, payload_col: str = "payload") -> Dat
     engine-portable and oracle-checkable; mean = px_sum / (w·h·ch) is one
     division away for callers.  Arrow batches through mapInPandas — one
     Python crossing per ~10k rows, numpy per image."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_image_stats_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(decode, schema=IMAGE_STATS_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _image_stats_row, IMAGE_STATS_SCHEMA)
 
 
 def image_thumbnail(df: DataFrame, id_col: str, payload_col: str = "payload",
@@ -438,26 +440,8 @@ def image_thumbnail(df: DataFrame, id_col: str, payload_col: str = "payload",
     inside Arrow batches, payloads never leave the executor."""
     if factor < 1:
         raise ValueError(f"image_thumbnail: factor must be >= 1, got {factor}")
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from pigpen_spark.functions import codecs as C
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf["id"], pdf["payload"]):
-                arr = C.png_decode(bytes(payload))[::factor, ::factor]
-                rows.append({
-                    "id": int(rid),
-                    "t_width": arr.shape[1], "t_height": arr.shape[0],
-                    "t_px_sum": int(arr.sum(dtype="int64")),
-                    "thumb": C.png_encode(arr),
-                })
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(work, schema=THUMB_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _thumbnail_row(i, b, factor), THUMB_SCHEMA)
 
 
 def synth_wav(df: DataFrame, id_col: str, out_col: str = "payload",
@@ -468,18 +452,9 @@ def synth_wav(df: DataFrame, id_col: str, out_col: str = "payload",
     ``constant=True`` drops the j%50 ramp (every sample = (i%100)·10) —
     the signal class the anti-aliased resampler passes EXACTLY, which is
     what its oracle query needs."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _wav_payload(i, constant)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _wav_payload(i, constant)},
+                     f"id long, {out_col} binary")
 
 
 def audio_features_wav(df: DataFrame, id_col: str,
@@ -489,18 +464,8 @@ def audio_features_wav(df: DataFrame, id_col: str,
     division (n·1000 div rate); sample_sum/peak are int64/int32 — all
     engine-portable.  Supersedes the stub :func:`audio_features` for PCM
     WAV payloads (the stub remains for unknown formats)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_audio_stats_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(decode, schema=AUDIO_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _audio_stats_row, AUDIO_SCHEMA)
 
 
 FRAME_STATS_SCHEMA = "id long, frame_index int, f_px_sum long"
@@ -511,18 +476,9 @@ def synth_gif(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame
     frames on a (6 + i%8) × (6 + (i÷2)%8) canvas, frame f pixel (x, y) =
     i%200 + f + x + y (grayscale palette; bounded < 256, so per-frame
     pixel sums have closed forms)."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _gif_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _gif_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def frame_sample_gif(df: DataFrame, id_col: str, payload_col: str = "payload",
@@ -536,18 +492,9 @@ def frame_sample_gif(df: DataFrame, id_col: str, payload_col: str = "payload",
     (mp4/webm) still need external codecs and keep the stub."""
     if every_n < 1:
         raise ValueError(f"frame_sample_gif: every_n must be >= 1, got {every_n}")
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf["id"], pdf["payload"]):
-                rows.extend(_frame_rows(int(rid), bytes(payload), every_n))
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(work, schema=FRAME_STATS_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _frame_rows(i, b, every_n, C.gif_decode),
+                     FRAME_STATS_SCHEMA)
 
 
 def synth_jpeg(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame:
@@ -556,18 +503,9 @@ def synth_jpeg(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFram
     (bx, by) constant at i%200 + bx + by — all-zero AC + integer DC at
     quant 1, so the lossy format round-trips bit-exactly and pixel sums
     have closed forms."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _jpeg_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _jpeg_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 DOWNSAMPLE_SCHEMA = ("id long, rate_out int, n_out long, sample_sum_out long, "
@@ -595,18 +533,9 @@ def audio_downsample(df: DataFrame, id_col: str, payload_col: str = "payload",
     edge-replicate padding), which is what the oracle query checks."""
     if factor < 1:
         raise ValueError(f"audio_downsample: factor must be >= 1, got {factor}")
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_downsample_row(int(rid), bytes(payload), factor, antialias)
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=DOWNSAMPLE_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _downsample_row(i, b, factor, antialias),
+                     DOWNSAMPLE_SCHEMA)
 
 
 VIDEO_META_SCHEMA = ("id long, duration_ms long, n_tracks int, width int, "
@@ -619,18 +548,9 @@ def synth_mp4(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame
     (240+16·(i%10)) avc1/hev1 video track (codec by parity) and an mp4a
     audio track — every field a closed-form function of i, so the
     profiling oracle never parses anything."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _mp4_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _mp4_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def video_meta(df: DataFrame, id_col: str, payload_col: str = "payload") -> DataFrame:
@@ -641,36 +561,29 @@ def video_meta(df: DataFrame, id_col: str, payload_col: str = "payload") -> Data
     frame DECODE stays with :func:`frame_sample`'s stub for mp4 and the
     real :func:`frame_sample_gif` for GIF.  Corrupt payloads quarantine
     as (-1, …, "corrupt") rows — the batch survives."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_video_meta_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=VIDEO_META_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _video_meta_row, VIDEO_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # FUSED synth→decode variants (round 4)
 # ---------------------------------------------------------------------------
 #
-# The unfused forms chain two (thumb: three) mapInPandas stages — payload
-# bytes cross the JVM↔Python Arrow boundary once per stage, and the whole
-# chain inherits the scan's partitioning (documents.parquet is ONE file at
-# bench scale → ONE task → single-threaded codec work).  The fused forms
-# do both fixes at once:
+# Every operator in this module is one :func:`_map_rows` call; the fused
+# forms differ only in their source and row function.  The unfused forms
+# chain two (thumb: three) ``_map_rows`` stages — payload bytes cross the
+# JVM↔Python Arrow boundary once per stage, and the whole chain inherits
+# the scan's partitioning (documents.parquet is ONE file at bench scale →
+# ONE task → single-threaded codec work).  ``_fused_synth`` fixes both:
 #
-# - repartition the SLIM id column (8 bytes/row) to defaultParallelism
-#   with an explicit partition count — explicit so AQE's size-based
-#   coalescing (which sees only kilobytes of ids and would collapse the
-#   CPU-bound stage back to one task) cannot undo the fan-out;
-# - run synthesize→encode→decode inside ONE mapInPandas, so payloads
-#   never cross a process boundary at all.
+# - its source is the SLIM id column (8 bytes/row) repartitioned to
+#   defaultParallelism with an explicit partition count — explicit so
+#   AQE's size-based coalescing (which sees only kilobytes of ids and
+#   would collapse the CPU-bound stage back to one task) cannot undo the
+#   fan-out;
+# - its row function runs synthesize→encode→decode, so payloads are
+#   built and read inside ONE ``_map_rows`` crossing and never cross a
+#   process boundary at all.
 #
 # Measured at sf0.1 (5000 docs, local[32]): ext_frame_sample_gif
 # 2.87 s → 0.59 s warm, ext_image_decode_jpeg 1.71 s → ~0.4 s.  At
@@ -678,29 +591,14 @@ def video_meta(df: DataFrame, id_col: str, payload_col: str = "payload") -> Data
 # fan-out, payload bytes stay executor-local, and the Arrow batch size
 # bounds per-task memory.  REAL payload corpora (payloads already in
 # parquet) skip the synth half and use the unfused decode operators,
-# whose scan partitioning is the object store's.
+# whose scan partitioning is the object store's; the unfused ``synth_*``
+# generators stay as the references the fused twins are tested against.
 
 
 def _fused_synth(df: DataFrame, id_col: str, row_fn, schema: str) -> DataFrame:
     """One-crossing synth→decode: ``row_fn(i) -> dict | list[dict]``."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    src = df.select(F.col(id_col).alias("id")).repartition(n, F.col("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows: list = []
-            for rid in pdf["id"]:
-                out = row_fn(int(rid))
-                if isinstance(out, list):
-                    rows.extend(out)
-                else:
-                    rows.append(out)
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(gen, schema=schema)
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return _map_rows(_ids(df, id_col).repartition(n, F.col("id")), row_fn, schema)
 
 
 def synth_image_stats(df: DataFrame, id_col: str, fmt: str = "png") -> DataFrame:
@@ -763,7 +661,7 @@ def synth_frame_stats_gif(df: DataFrame, id_col: str,
         raise ValueError(
             f"synth_frame_stats_gif: every_n must be >= 1, got {every_n}")
     return _fused_synth(
-        df, id_col, lambda i: _frame_rows(i, _gif_payload(i), every_n),
+        df, id_col, lambda i: _frame_rows(i, _gif_payload(i), every_n, C.gif_decode),
         FRAME_STATS_SCHEMA,
     )
 
@@ -793,28 +691,11 @@ def _mjpeg_payload(i: int) -> bytes:
     8x8 blocks, block (bx, by) of frame f constant at i%150 + f + bx +
     by — inside JPEG's lossless subspace, so every frame round-trips
     bit-exactly and per-frame pixel sums have closed forms."""
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     bw, bh, a = 1 + i % 3, 1 + (i // 2) % 3, i % 150
     samples = []
     for f in range(1 + i % 4):
-        blocks = a + f + np.arange(bw)[None, :] + np.arange(bh)[:, None]
-        img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(np.uint8)
-        samples.append(C.jpeg_encode(img))
+        samples.append(C.jpeg_encode(_block_image(bw, bh, a + f)))
     return C.mp4_encode_mjpeg(samples, bw * 8, bh * 8, fps=24)
-
-
-def _mp4_frame_rows(rid: int, data: bytes, every_n: int) -> list[dict]:
-    from pigpen_spark.functions import codecs as C
-
-    _w, _h, frames = C.mp4_frames(data)
-    return [
-        {"id": rid, "frame_index": f,
-         "f_px_sum": int(frames[f].sum(dtype="int64"))}
-        for f in range(0, len(frames), every_n)
-    ]
 
 
 def frame_sample_mp4(df: DataFrame, id_col: str, payload_col: str = "payload",
@@ -827,34 +708,16 @@ def frame_sample_mp4(df: DataFrame, id_col: str, payload_col: str = "payload",
     order of operations anyway)."""
     if every_n < 1:
         raise ValueError(f"frame_sample_mp4: every_n must be >= 1, got {every_n}")
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf["id"], pdf["payload"]):
-                rows.extend(_mp4_frame_rows(int(rid), bytes(payload), every_n))
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(work, schema=FRAME_STATS_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _frame_rows(i, b, every_n, C.mp4_frames),
+                     FRAME_STATS_SCHEMA)
 
 
 def synth_mjpeg(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame:
     """Deterministic synthetic MJPEG-in-mp4 payloads (see _mjpeg_payload)."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _mjpeg_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _mjpeg_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def synth_frame_stats_mp4(df: DataFrame, id_col: str,
@@ -864,7 +727,7 @@ def synth_frame_stats_mp4(df: DataFrame, id_col: str,
         raise ValueError(
             f"synth_frame_stats_mp4: every_n must be >= 1, got {every_n}")
     return _fused_synth(
-        df, id_col, lambda i: _mp4_frame_rows(i, _mjpeg_payload(i), every_n),
+        df, id_col, lambda i: _frame_rows(i, _mjpeg_payload(i), every_n, C.mp4_frames),
         FRAME_STATS_SCHEMA,
     )
 
@@ -885,10 +748,6 @@ def _avi_payload(i: int) -> bytes:
     (4 + i%5)×(3 + (i//2)%4) RGB pixels, pixel (y, x, c) of frame f =
     i%100 + f + x + y + c (max 99+3+8+6+2 < 256: no wrap) — the pixel
     sum has the closed form the oracle predicts without decoding."""
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     w, h, a = 4 + i % 5, 3 + (i // 2) % 4, i % 100
     frames = []
     for f in range(1 + i % 4):
@@ -900,17 +759,6 @@ def _avi_payload(i: int) -> bytes:
     return C.avi_encode_dib(frames, fps=12)
 
 
-def _avi_frame_rows(rid: int, data: bytes, every_n: int) -> list[dict]:
-    from pigpen_spark.functions import codecs as C
-
-    _w, _h, frames = C.avi_frames(data)
-    return [
-        {"id": rid, "frame_index": f,
-         "f_px_sum": int(frames[f].sum(dtype="int64"))}
-        for f in range(0, len(frames), every_n)
-    ]
-
-
 def frame_sample_avi(df: DataFrame, id_col: str, payload_col: str = "payload",
                      every_n: int = 2) -> DataFrame:
     """REAL AVI frame sampling (DIB or MJPG streams): decode every
@@ -918,34 +766,16 @@ def frame_sample_avi(df: DataFrame, id_col: str, payload_col: str = "payload",
     sibling of :func:`frame_sample_mp4`; other codecs raise."""
     if every_n < 1:
         raise ValueError(f"frame_sample_avi: every_n must be >= 1, got {every_n}")
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf["id"], pdf["payload"]):
-                rows.extend(_avi_frame_rows(int(rid), bytes(payload), every_n))
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(work, schema=FRAME_STATS_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _frame_rows(i, b, every_n, C.avi_frames),
+                     FRAME_STATS_SCHEMA)
 
 
 def synth_avi(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame:
     """Deterministic synthetic uncompressed-AVI payloads (see _avi_payload)."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _avi_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _avi_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def synth_frame_stats_avi(df: DataFrame, id_col: str,
@@ -955,7 +785,7 @@ def synth_frame_stats_avi(df: DataFrame, id_col: str,
         raise ValueError(
             f"synth_frame_stats_avi: every_n must be >= 1, got {every_n}")
     return _fused_synth(
-        df, id_col, lambda i: _avi_frame_rows(i, _avi_payload(i), every_n),
+        df, id_col, lambda i: _frame_rows(i, _avi_payload(i), every_n, C.avi_frames),
         FRAME_STATS_SCHEMA,
     )
 
@@ -965,8 +795,6 @@ def _webm_payload(i: int) -> bytes:
     (640 + 16·(i%10)) × (360 + 16·(i%6)) V_VP9/V_AV1 video (codec by
     parity) at 25 fps + an A_OPUS audio track — every field closed-form
     in i."""
-    from pigpen_spark.functions import codecs as C
-
     dur = 10_000 + (i * 41) % 40_000
     return C.webm_encode_skeleton(dur, [
         {"handler": "vide", "codec": "V_VP9" if i % 2 == 0 else "V_AV1",
@@ -978,18 +806,9 @@ def _webm_payload(i: int) -> bytes:
 
 def synth_webm(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame:
     """Deterministic synthetic WebM payloads (see _webm_payload)."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _webm_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _webm_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def synth_video_meta_webm(df: DataFrame, id_col: str) -> DataFrame:
@@ -1010,28 +829,11 @@ def _webm_mjpeg_payload(i: int) -> bytes:
     + by — JPEG's lossless subspace, closed-form per-frame pixel sums.
     cluster_len=2 so clips with 3-4 frames span MULTIPLE Clusters and
     the demuxer's cluster+block timecode combination is on the hash."""
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     bw, bh, a = 1 + (i // 2) % 3, 1 + i % 3, (i * 7) % 140
     samples = []
     for f in range(1 + (i // 3) % 4):
-        blocks = a + f + np.arange(bw)[None, :] + np.arange(bh)[:, None]
-        img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(np.uint8)
-        samples.append(C.jpeg_encode(img))
+        samples.append(C.jpeg_encode(_block_image(bw, bh, a + f)))
     return C.webm_encode_mjpeg(samples, bw * 8, bh * 8, fps=24, cluster_len=2)
-
-
-def _webm_frame_rows(rid: int, data: bytes, every_n: int) -> list[dict]:
-    from pigpen_spark.functions import codecs as C
-
-    _w, _h, frames = C.webm_frames(data)
-    return [
-        {"id": rid, "frame_index": f,
-         "f_px_sum": int(frames[f].sum(dtype="int64"))}
-        for f in range(0, len(frames), every_n)
-    ]
 
 
 def frame_sample_webm(df: DataFrame, id_col: str, payload_col: str = "payload",
@@ -1044,35 +846,17 @@ def frame_sample_webm(df: DataFrame, id_col: str, payload_col: str = "payload",
     first)."""
     if every_n < 1:
         raise ValueError(f"frame_sample_webm: every_n must be >= 1, got {every_n}")
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf["id"], pdf["payload"]):
-                rows.extend(_webm_frame_rows(int(rid), bytes(payload), every_n))
-            yield pd.DataFrame(rows)
-
-    return src.mapInPandas(work, schema=FRAME_STATS_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     lambda i, b: _frame_rows(i, b, every_n, C.webm_frames),
+                     FRAME_STATS_SCHEMA)
 
 
 def synth_webm_mjpeg(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame:
     """Deterministic synthetic MJPEG-in-Matroska payloads
     (see _webm_mjpeg_payload)."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _webm_mjpeg_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _webm_mjpeg_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def synth_frame_stats_webm(df: DataFrame, id_col: str,
@@ -1082,7 +866,7 @@ def synth_frame_stats_webm(df: DataFrame, id_col: str,
         raise ValueError(
             f"synth_frame_stats_webm: every_n must be >= 1, got {every_n}")
     return _fused_synth(
-        df, id_col, lambda i: _webm_frame_rows(i, _webm_mjpeg_payload(i), every_n),
+        df, id_col, lambda i: _frame_rows(i, _webm_mjpeg_payload(i), every_n, C.webm_frames),
         FRAME_STATS_SCHEMA,
     )
 
@@ -1099,8 +883,6 @@ def _mp3_payload(i: int) -> bytes:
     """Synthetic MP3 skeleton i: 20 + i%30 MPEG-1 L3 frames at rate
     index i%3, frames alternating between bitrate indices 9 + i%5 and
     9 + (i//5)%5 — every profiled field closed-form in i."""
-    from pigpen_spark.functions import codecs as C
-
     n = 20 + i % 30
     a, b = 9 + i % 5, 9 + (i // 5) % 5
     return C.mp3_encode_skeleton(n, i % 3, [a if f % 2 == 0 else b
@@ -1108,8 +890,6 @@ def _mp3_payload(i: int) -> bytes:
 
 
 def _mp3_meta_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     m = C.mp3_meta(data)
     return {"id": rid, "n_frames": m["n_frames"],
             "sample_rate": m["sample_rate"], "duration_ms": m["duration_ms"],
@@ -1123,34 +903,15 @@ def audio_profile_mp3(df: DataFrame, id_col: str,
     chain walk (ID3v2 skip, per-frame size arithmetic) at header speed —
     the audio sibling of video_meta; PCM-WAV stays the decode-real
     path."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_mp3_meta_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=MP3_META_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _mp3_meta_row, MP3_META_SCHEMA)
 
 
 def synth_mp3(df: DataFrame, id_col: str, out_col: str = "payload") -> DataFrame:
     """Deterministic synthetic MP3 frame chains (see _mp3_payload)."""
-    src = df.select(F.col(id_col).alias("id"))
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [{"id": (i := int(rid)), out_col: _mp3_payload(i)}
-                 for rid in pdf["id"]]
-            )
-
-    return src.mapInPandas(gen, schema=f"id long, {out_col} binary")
+    return _map_rows(_ids(df, id_col),
+                     lambda i: {"id": i, out_col: _mp3_payload(i)},
+                     f"id long, {out_col} binary")
 
 
 def synth_audio_profile_mp3(df: DataFrame, id_col: str) -> DataFrame:
@@ -1173,8 +934,6 @@ def _mp3_vbr_payload(i: int) -> bytes:
     _mp3_payload so the two MP3 fixtures stay disjoint); the header
     frame reuses the even-frame bitrate index so the chain walk's
     bitrate envelope keeps a clean closed form."""
-    from pigpen_spark.functions import codecs as C
-
     n = 15 + i % 20
     a, b = 9 + i % 5, 9 + (i // 3) % 5
     return C.mp3_encode_vbr(
@@ -1183,8 +942,6 @@ def _mp3_vbr_payload(i: int) -> bytes:
 
 
 def _mp3_vbr_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     fast = C.mp3_meta_fast(data)
     walk = C.mp3_meta(data)
     return {"id": rid, "method": fast["method"],
@@ -1218,8 +975,6 @@ def _ogg_payload(i: int) -> bytes:
     3 + i%5 audio pages of 2 + i%3 packets, 1 + i%2 channels, sample
     rate cycling {44100, 48000, 32000} by i%3, Opus pre-skip
     312 + (i%4)·24 — every profiled field closed-form in i."""
-    from pigpen_spark.functions import codecs as C
-
     return C.ogg_encode_skeleton(
         "opus" if i % 2 == 0 else "vorbis",
         n_audio_pages=3 + i % 5, packets_per_page=2 + i % 3,
@@ -1229,8 +984,6 @@ def _ogg_payload(i: int) -> bytes:
 
 
 def _ogg_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     m = C.ogg_meta(data)
     return {"id": rid, **m}
 
@@ -1243,18 +996,8 @@ def audio_profile_ogg(df: DataFrame, id_col: str,
     duration from the final granule position (48 kHz clock minus
     pre-skip for Opus, declared-rate samples for Vorbis).  Header
     arithmetic only; corrupt pages raise for upstream quarantine."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_ogg_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=OGG_META_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _ogg_row, OGG_META_SCHEMA)
 
 
 def synth_audio_profile_ogg(df: DataFrame, id_col: str) -> DataFrame:
@@ -1275,8 +1018,6 @@ def _flac_payload(i: int) -> bytes:
     """Synthetic FLAC header i: rate cycling {44100, 48000, 32000},
     1 + i%2 channels, 16/24-bit by i%2, 100000 + (i·137)%50000 total
     samples, i%3 padding blocks after STREAMINFO."""
-    from pigpen_spark.functions import codecs as C
-
     return C.flac_encode_streaminfo(
         sample_rate=(44100, 48000, 32000)[i % 3], channels=1 + i % 2,
         bits_per_sample=16 + (i % 2) * 8,
@@ -1285,8 +1026,6 @@ def _flac_payload(i: int) -> bytes:
 
 
 def _flac_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     return {"id": rid, **C.flac_streaminfo(data)}
 
 
@@ -1297,18 +1036,8 @@ def audio_profile_flac(df: DataFrame, id_col: str,
     bps / 36-bit sample count) and walk the metadata chain to the
     last-block flag — exact duration from the first 46 bytes, no audio
     frame ever read."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_flac_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=FLAC_META_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _flac_row, FLAC_META_SCHEMA)
 
 
 def synth_audio_profile_flac(df: DataFrame, id_col: str) -> DataFrame:
@@ -1327,15 +1056,11 @@ def _aac_payload(i: int) -> bytes:
     """Synthetic ADTS chain i: 10 + i%25 frames at rate index
     (3, 8, 11)[i%3] (48000/16000/8000 Hz), 1 + i%2 channels — every
     profiled field closed-form in i."""
-    from pigpen_spark.functions import codecs as C
-
     return C.adts_encode_skeleton(10 + i % 25, rate_idx=(3, 8, 11)[i % 3],
                                   channels=1 + i % 2, profile=1)
 
 
 def _aac_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
     return {"id": rid, **C.adts_meta(data)}
 
 
@@ -1345,18 +1070,8 @@ def audio_profile_aac(df: DataFrame, id_col: str,
     (13-bit frame lengths locate each next header; 1024 samples per raw
     data block) — the aac sibling of audio_profile_mp3; broken chains
     raise for upstream quarantine."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_aac_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=AAC_META_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _aac_row, AAC_META_SCHEMA)
 
 
 def synth_audio_profile_aac(df: DataFrame, id_col: str) -> DataFrame:
@@ -1385,8 +1100,6 @@ def _audio_auto_row(rid: int, data: bytes) -> dict:
     VBRI O(1) when present, chain walk otherwise).  ``detail`` is the
     format's native size measure (PCM frames / MP3 frames / Ogg pages /
     FLAC samples)."""
-    from pigpen_spark.functions import codecs as C
-
     try:
         if data[:4] == b"OggS":
             m = C.ogg_meta(data)
@@ -1445,18 +1158,8 @@ def audio_profile_auto(df: DataFrame, id_col: str,
     prescribes, now an operator instead of an instruction.  Unknown
     magics come back tagged ``format='unknown'`` and corrupt payloads
     ``format='corrupt'`` (quarantine rows, batch never dies)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(payload_col).alias("payload"))
-
-    def work(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [_audio_auto_row(int(rid), bytes(payload))
-                 for rid, payload in zip(pdf["id"], pdf["payload"])]
-            )
-
-    return src.mapInPandas(work, schema=AUDIO_AUTO_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col),
+                     _audio_auto_row, AUDIO_AUTO_SCHEMA)
 
 
 def _audio_auto_payload(i: int) -> bytes:
@@ -1496,10 +1199,6 @@ def _mm_payload(i: int) -> bytes:
     stage has genuine work.  Every format stays in its lossless
     subspace (PNG any pixels; JPEG block-constant; GIF palette ramp) so
     decoded stats have closed forms."""
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     fmt, k = i % 3, (i // 3) % 40
     if fmt == 0:
         w, h, a = 8 + k % 4, 8 + (k // 4) % 5, (k * 9) % 120
@@ -1510,9 +1209,7 @@ def _mm_payload(i: int) -> bytes:
                             filter_type=2 * (k % 2))
     if fmt == 1:
         bw, bh, a = 1 + k % 3, 1 + (k // 3) % 3, (k * 11) % 120
-        blocks = a + np.arange(bw)[None, :] + np.arange(bh)[:, None]
-        img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).astype(np.uint8)
-        return C.jpeg_encode(img)
+        return C.jpeg_encode(_block_image(bw, bh, a))
     w, h, a = 6 + k % 5, 6 + (k // 5) % 4, (k * 13) % 120
     frame = (a + np.arange(w)[None, :] + np.arange(h)[:, None]).astype(np.uint8)
     return C.gif_encode([frame])
@@ -1521,8 +1218,6 @@ def _mm_payload(i: int) -> bytes:
 def _mm_stats_row(rid: int, data: bytes) -> dict:
     """Magic-sniff dispatch to the matching REAL decoder (the
     synth_video_meta pattern): PNG/JPEG full decode, GIF first frame."""
-    from pigpen_spark.functions import codecs as C
-
     if data[:2] == b"\xFF\xD8":
         arr = C.jpeg_decode(data)
     elif data[:4] == b"GIF8":
@@ -1613,10 +1308,6 @@ def image_curation_pack(stats: DataFrame, id_col: str = "id",
 
 def _bmp_payload(i: int) -> bytes:
     """Synthetic 24-bit bitmap i: (4 + i%9) × (3 + (i//2)%7) RGB ramp."""
-    import numpy as np
-
-    from pigpen_spark.functions import codecs as C
-
     w, h, a = 4 + i % 9, 3 + (i // 2) % 7, (i * 7) % 200
     x = np.arange(w)[None, :, None]
     y = np.arange(h)[:, None, None]
@@ -1630,22 +1321,10 @@ def _image_triage_payload(i: int) -> bytes:
 
 
 def _image_triage_row(rid: int, data: bytes) -> dict:
-    from pigpen_spark.functions import codecs as C
-
-    if data[:8] == b"\x89PNG\r\n\x1a\n":
-        w, h, _d, _c = C.png_meta(data)
-        fmt = "png"
-    elif data[:2] == b"\xFF\xD8":
-        w, h, _nc = C.jpeg_meta(data)
-        fmt = "jpeg"
-    elif data[:4] == b"GIF8":
-        w, h, _nf = C.gif_meta(data)
-        fmt = "gif"
-    elif data[:2] == b"BM":
-        w, h, _bpp = C.bmp_meta(data)
-        fmt = "bmp"
-    else:
+    meta = _image_header(data)
+    if meta is None:
         raise ValueError("image triage fixture: unknown magic")
+    w, h, fmt = meta
     return {"id": rid, "width": w, "height": h, "format": fmt}
 
 

@@ -65,6 +65,13 @@ from pigpen_spark.operators.windows import partition_offsets
 _MISS_A, _MISS_B = -9_000_000_001, -9_000_000_002
 
 
+def _int_div(x, d: int):
+    """Block/bucket id ``x DIV d``: Spark's integral division, a long
+    that truncates toward zero and stays exact at any long (a double
+    ``(x - x % d) / d`` rounds past 2^53)."""
+    return F.call_function("div", x, F.lit(d))
+
+
 def pack_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(pos, sym, doc_id, loc): the corpus as one global symbol sequence.
 
@@ -97,14 +104,13 @@ def pack_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     n_docs = int(bounds["n"])
     n_buckets = max(8 * docs.sparkSession.sparkContext.defaultParallelism, 64)
     span = hi - lo + 1
-    if span > (1 << 53) or span > max(1, n_docs) * 4096:
+    if span > max(1, n_docs) * 4096:
         # sparse/clustered ids: value-range buckets would land nearly all
-        # docs in a handful of buckets (single-partition windows), and
-        # past 2^53 the double division below can round and break bucket
-        # monotonicity.  Fall back to a SAMPLED range partition — the pid
-        # is frozen in a checkpoint so the offsets pass and the window
-        # pass provably read the same tagging (a persist alone can miss
-        # the cache under self-join relation dedup and re-sample).
+        # docs in a handful of buckets (single-partition windows).  Fall
+        # back to a SAMPLED range partition — the pid is frozen in a
+        # checkpoint so the offsets pass and the window pass provably
+        # read the same tagging (a persist alone can miss the cache under
+        # self-join relation dedup and re-sample).
         # Registered with the session: the returned positions derive
         # from it, so it lives until clear_engine_caches.
         bucketed = (
@@ -114,8 +120,7 @@ def pack_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     else:
         idc = F.col("doc_id").cast("long") - F.lit(lo)
         div = max(1, -(-span // n_buckets))
-        bucketed = toks.withColumn(
-            pid, ((idc - idc % F.lit(div)) / F.lit(div)).cast("long"))
+        bucketed = toks.withColumn(pid, _int_div(idc, div))
     off, _ = partition_offsets(bucketed, pid, F.sum("n"))
     from pyspark.sql import Window
     w = Window.partitionBy(pid).orderBy("doc_id") \
@@ -164,16 +169,15 @@ def _dense_rank_bucketed(df: DataFrame, cols: list[str],
     re-checkpoint)."""
     # composite key (r0+1)*(n_prev+2) + (r1+1): monotone in the
     # (r0, r1) lexicographic order, fits a long for any n_prev up to
-    # _MAX_TOKENS (suffix_ranks refuses larger corpora); integer bucket
-    # arithmetic avoids float rounding
+    # _MAX_TOKENS (suffix_ranks refuses larger corpora); the bucket is
+    # the key's integral DIV, exact at any long
     n_buckets = max(16 * df.sparkSession.sparkContext.defaultParallelism, 64)
     span = (n_prev + 2) * (n_prev + 2)
     div = max(1, -(-span // n_buckets))
     c1 = (F.col(cols[1]) if len(cols) > 1 else F.lit(-1)).cast("long")
     combined = ((F.col(cols[0]).cast("long") + 1) * F.lit(n_prev + 2)
                 + (c1 + 1))
-    return _dense_rank_via(df, cols,
-                           (combined - combined % F.lit(div)) / F.lit(div))
+    return _dense_rank_via(df, cols, _int_div(combined, div))
 
 
 def _dense_rank_sym(df: DataFrame) -> tuple[DataFrame, int]:
@@ -186,8 +190,7 @@ def _dense_rank_sym(df: DataFrame) -> tuple[DataFrame, int]:
     n_buckets = max(16 * df.sparkSession.sparkContext.defaultParallelism, 64)
     div = max(1, -(-(1 << 32) // n_buckets))
     sym = F.col("sym").cast("long")
-    return _dense_rank_via(df, ["sym"],
-                           (sym - sym % F.lit(div)) / F.lit(div))
+    return _dense_rank_via(df, ["sym"], _int_div(sym, div))
 
 
 def _dense_rank_via(df: DataFrame, cols: list[str],
@@ -209,7 +212,7 @@ def _dense_rank_via(df: DataFrame, cols: list[str],
 
     w = Window.partitionBy("__sab").orderBy(*[F.col(c) for c in cols])
     pre = df.select("pos", *[F.col(c) for c in cols],
-                    bucket.cast("long").alias("__sab"))
+                    bucket.alias("__sab"))
     local = pre.select(
         "pos", "__sab",
         (F.dense_rank().over(w) - 1).cast("long").alias("__salr"))
@@ -295,7 +298,7 @@ def suffix_ranks(positions: DataFrame,
             raise RuntimeError("suffix_ranks: doubling failed to converge")
         horizon = (_RADIX - 1) * width
         block = max(base_block, horizon)
-        blk = (F.col("pos") - F.col("pos") % F.lit(block)) / F.lit(block)
+        blk = _int_div(F.col("pos"), block)
         ghost = ((F.col("pos") % F.lit(block) < F.lit(horizon))
                  & (F.col("pos") >= F.lit(block)))
         tagged = r.select(
@@ -345,7 +348,7 @@ def adjacent_lcp(rank_tables: list[tuple[int, DataFrame]],
     final = rank_tables[-1][1]
     par = final.sparkSession.sparkContext.defaultParallelism
     block = max(-(-n // max(8 * par, 1)), 1)
-    blk = (F.col("rank") - F.col("rank") % F.lit(block)) / F.lit(block)
+    blk = _int_div(F.col("rank"), block)
     ghost = ((F.col("rank") % F.lit(block) == 0)
              & (F.col("rank") >= F.lit(block)))
     tagged = final.select(
@@ -440,7 +443,7 @@ def maximal_repeats(docs: DataFrame, id_col: str, text_col: str,
     # instead of two (guide §2.4).
     par = positions.sparkSession.sparkContext.defaultParallelism
     block = max(-(-n // max(8 * par, 1)), 1)
-    blk = (F.col("pos") - F.col("pos") % F.lit(block)) / F.lit(block)
+    blk = _int_div(F.col("pos"), block)
     ghost = ((F.col("pos") % F.lit(block) == F.lit(block - 1))
              & (F.col("pos") < F.lit(n - 1)))
     tagged = positions.select(

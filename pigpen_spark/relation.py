@@ -688,33 +688,22 @@ class Relation:
         return self.reduce_rel(**{out_col: Fold(bag)})
 
     def reduce_py(self, zero, seq_op, comb_op, finish=None, out_col: str = "value",
-                  out_type: str = "string", arrow: bool = True) -> "Relation":
+                  out_type: str = "string") -> "Relation":
         """Whole-relation fold with arbitrary Python fns and map-side
         partials (reference: pigpen.join/fold parallel tree aggregation,
         join.clj:140-156, 280-314).  Empty → empty.
 
-        ``arrow=True`` (default): Arrow-batched mapInPandas folds each
-        partition to ONE pickled partial row; the partials (one per
-        non-empty partition) merge in a single final group — the
-        distributed work stays batched, only #partitions tiny rows
-        shuffle, and empty input naturally produces no partials (no extra
-        isEmpty probe job).  Rows reach ``seq_op`` as dicts with
-        Arrow-converted scalar values (numpy types for numerics).
-
-        ``arrow=False``: the original RDD treeAggregate formulation with
-        plain-Python row dicts."""
-        fin = finish or (lambda x: x)
-        if not arrow:
-            df = self.df
-            if df.isEmpty():
-                return self._with(self.spark.createDataFrame([], schema=f"{out_col} {out_type}"))
-            rows = df.rdd.map(lambda r: r.asDict(recursive=True))
-            acc = rows.treeAggregate(zero, seq_op, comb_op)
-            return self._with(self.spark.createDataFrame([(fin(acc),)], schema=f"{out_col} {out_type}"))
-
+        Arrow-batched mapInPandas folds each partition to ONE pickled
+        partial row; the partials (one per non-empty partition) merge in
+        a single final group — the distributed work stays batched, only
+        #partitions tiny rows shuffle, and empty input naturally produces
+        no partials (no extra isEmpty probe job).  Rows reach ``seq_op``
+        as dicts with Arrow-converted scalar values (numpy types for
+        numerics)."""
         import copy
         import pickle
 
+        fin = finish or (lambda x: x)
         src = self.df.select(F.struct(*[F.col(c) for c in self.df.columns]).alias("__v"))
 
         def partials(batches):
@@ -1093,23 +1082,19 @@ class GroupedRelation:
         ))
 
     def fold_py(self, zero, seq_op, comb_op, finish=None, key_names: Sequence[str] | None = None,
-                out_col: str = "value", out_type: str = "string", arrow: bool = True):
+                out_col: str = "value", out_type: str = "string"):
         """Python fold with MAP-SIDE PARTIALS — Pig Algebraic 3-phase
         (partial + final), the reference's arbitrary-fold execution shape.
         Spark's pandas GROUPED_AGG UDF has no partial phase (SURVEY §4.3
         note), so we build it:
 
-        ``arrow=True`` (default): stage 1 is an Arrow-batched mapInPandas
-        that folds each partition into per-key PARTIAL accumulators (one
-        output row per key per partition — the map-side combine); stage 2
-        shuffles only the pickled partials and merges them per key with
-        ``comb_op`` in applyInPandas.  ~10× the row-at-a-time path on wide
-        rows (see SCALE.md).  Rows reach ``seq_op`` as dicts whose values
+        stage 1 is an Arrow-batched mapInPandas that folds each partition
+        into per-key PARTIAL accumulators (one output row per key per
+        partition — the map-side combine); stage 2 shuffles only the
+        pickled partials and merges them per key with ``comb_op`` in
+        applyInPandas.  2.0× the RDD aggregateByKey formulation it replaced
+        on wide rows (see SCALE.md).  Rows reach ``seq_op`` as dicts whose values
         are Arrow-converted scalars (numpy types for numerics).
-
-        ``arrow=False``: the original RDD aggregateByKey formulation —
-        row-at-a-time pickling, plain-Python values; keep as the fallback
-        for fns that are sensitive to numpy scalar types.
 
         Returns key columns + ``out_col``.
         """
@@ -1124,13 +1109,6 @@ class GroupedRelation:
         out_schema = ", ".join(
             [f"{n} {t}" for n, t in zip(knames, ktypes)] + [f"{out_col} {out_type}"]
         )
-        if not arrow:
-            nk = len(knames)
-            rdd = df.rdd.map(lambda r: (tuple(r[:nk]), r["__v"].asDict(recursive=True)))
-            agged = rdd.aggregateByKey(zero, seq_op, comb_op)
-            out = agged.map(lambda kv: tuple(kv[0]) + (fin(kv[1]),))
-            return rel._with(rel.spark.createDataFrame(out, schema=out_schema))
-
         import copy
         import pickle
 

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pigpen_spark.functions import dedup as D
+from pigpen_spark.functions import multimodal as M
 from pigpen_spark.functions import similarity as S
 from pigpen_spark.functions import text as T
 
@@ -171,3 +172,34 @@ def test_lsh_index_paths_on_empty_relation(spark):
     assert idx.count() == 0
     assert S.lsh_topk_against(idx, emb, k=3, n_planes=3, dim=4).count() == 0
     assert S.negative_samples(emb, "vec_id", k=2, n_total=1).count() == 0
+
+
+UNFUSED_DECODERS = [
+    ("image_stats", M.IMAGE_STATS_SCHEMA),
+    ("image_thumbnail", M.THUMB_SCHEMA),
+    ("audio_features_wav", M.AUDIO_SCHEMA),
+    ("audio_downsample", M.DOWNSAMPLE_SCHEMA),
+    ("video_meta", M.VIDEO_META_SCHEMA),
+    ("frame_sample_gif", M.FRAME_STATS_SCHEMA),
+    ("frame_sample_mp4", M.FRAME_STATS_SCHEMA),
+    ("frame_sample_avi", M.FRAME_STATS_SCHEMA),
+    ("frame_sample_webm", M.FRAME_STATS_SCHEMA),
+    ("audio_profile_mp3", M.MP3_META_SCHEMA),
+    ("audio_profile_ogg", M.OGG_META_SCHEMA),
+    ("audio_profile_flac", M.FLAC_META_SCHEMA),
+    ("audio_profile_aac", M.AAC_META_SCHEMA),
+    ("audio_profile_auto", M.AUDIO_AUTO_SCHEMA),
+    ("decode_image_meta", M.IMAGE_META_SCHEMA),
+]
+
+
+@pytest.mark.parametrize("name,schema", UNFUSED_DECODERS,
+                         ids=[n for n, _ in UNFUSED_DECODERS])
+def test_multimodal_decoder_on_empty_relation(spark, name, schema):
+    empty = spark.range(4, numPartitions=2).select(
+        F.col("id").alias("doc_id"),
+        F.lit(b"").cast("binary").alias("payload"),
+    ).filter(F.col("doc_id") < 0)
+    out = getattr(M, name)(empty, "doc_id")
+    assert out.collect() == []
+    assert out.schema == spark.createDataFrame([], schema).schema

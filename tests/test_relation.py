@@ -300,10 +300,9 @@ class TestFolds:
         [row] = out.df.collect()
         assert row["bag"] == [1, 3, 3] and row["ds"] == [1, 3]
 
-    @pytest.mark.parametrize("arrow", [True, False])
-    def test_fold_py_partial_agg(self, spark, arrow):
-        # arbitrary python fold with map-side partials, on both paths:
-        # Arrow-batched mapInPandas partials (default) and RDD aggregateByKey
+    def test_fold_py_partial_agg(self, spark):
+        # arbitrary python fold with map-side partials: Arrow-batched
+        # mapInPandas partials merged per key in applyInPandas
         r = return_(spark, [("a", 1), ("a", 2), ("b", 3)], "k string, v long")
         out = r.group_by("k").fold_py(
             zero=0,
@@ -311,7 +310,6 @@ class TestFolds:
             comb_op=lambda a, b: a + b,
             finish=str,
             key_names=["k"],
-            arrow=arrow,
         )
         rows = {row["k"]: row["value"] for row in out.df.collect()}
         assert rows == {"a": "5", "b": "9"}

@@ -19,24 +19,21 @@ def test_into_empty_is_empty(spark):
     assert r.into(F.col("x")).df.collect() == []
 
 
-@pytest.mark.parametrize("arrow", [True, False])
-def test_reduce_py_tree_aggregate(spark, arrow):
+def test_reduce_py_tree_aggregate(spark):
     r = return_(spark, [(i,) for i in range(1, 101)], "x long")
     out = r.reduce_py(
         zero=0,
         seq_op=lambda acc, row: acc + row["x"],
         comb_op=lambda a, b: a + b,
         finish=str,
-        arrow=arrow,
     )
     [row] = out.df.collect()
     assert row["value"] == "5050"
 
 
-@pytest.mark.parametrize("arrow", [True, False])
-def test_reduce_py_empty(spark, arrow):
+def test_reduce_py_empty(spark):
     r = return_(spark, [(1,)], "x long").filter(F.lit(False))
-    assert r.reduce_py(0, lambda a, r_: a, lambda a, b: a, arrow=arrow).df.collect() == []
+    assert r.reduce_py(0, lambda a, r_: a, lambda a, b: a).df.collect() == []
 
 
 def test_join_multi_required_optional(spark):

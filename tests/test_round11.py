@@ -176,6 +176,21 @@ class TestOffsetExprMixedKeys:
         assert got == {-(1 << 40): 0, 5: 3, (1 << 40) + 7: 5}
 
 
+class TestSuffixIntegerBlockIds:
+    """Suffix-array block and bucket ids are integral DIV, exact past
+    2^53 — a double ``(x - x % d) / d`` returns ...976 for (2^62+7) / 4."""
+
+    def test_int_div_matches_python_truncating_division(self, spark):
+        from pigpen_spark.functions.suffix import _int_div
+        xs = [(1 << 62) + 7, -((1 << 62) + 7), -5, -8, -1, 0, 7]
+        df = spark.createDataFrame([(x,) for x in xs], "x long")
+        for d in (4, 3, 1 << 20):
+            out = df.select("x", _int_div(F.col("x"), d).alias("q"))
+            assert dict(out.dtypes)["q"] == "bigint"
+            want = {x: (abs(x) // d) * (1 if x >= 0 else -1) for x in xs}
+            assert {r["x"]: r["q"] for r in out.collect()} == want
+
+
 class TestTwoPhaseOffsetsFrozen:
     """Results never depend on a cache being hit or kept: every operator
     built on `partition_offsets` must give the ground truth when its

@@ -359,6 +359,30 @@ class TestFusedMatchesUnfused:
         assert {tuple(r) for r in unfused_v.collect()} == \
                {tuple(r) for r in fused_v.collect()}
 
+        unfused_w = M.video_meta(M.synth_webm(base, "doc_id"), "id")
+        fused_w = M.synth_video_meta_webm(base, "doc_id")
+        assert {tuple(r) for r in unfused_w.collect()} == \
+               {tuple(r) for r in fused_w.collect()}
+
+        # no unfused synth_* exists for these fixtures: decode their
+        # payload bytes directly
+        def payloads(make):
+            return spark.createDataFrame(
+                [(i, make(i)) for i in range(8)], "id long, payload binary")
+
+        unfused_aac = M.audio_profile_aac(payloads(M._aac_payload), "id")
+        fused_aac = M.synth_audio_profile_aac(base, "doc_id")
+        assert {tuple(r) for r in unfused_aac.collect()} == \
+               {tuple(r) for r in fused_aac.collect()}
+
+        # decode_image_meta and the triage fixture share one header sniff
+        meta = M.decode_image_meta(payloads(M._image_triage_payload), "id")
+        got = {(r["id"], r["width"], r["height"], r["format"])
+               for r in meta.collect()}
+        fused_t = M.synth_image_triage(base, "doc_id")
+        assert got == {tuple(r) for r in fused_t.collect()}
+        assert {f for _i, _w, _h, f in got} == {"png", "jpeg", "gif", "bmp"}
+
     def test_thumb_and_downsample_fused_equivalence(self, spark):
         from pyspark.sql import functions as F
 
