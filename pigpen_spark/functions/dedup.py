@@ -34,7 +34,7 @@ from collections.abc import Sequence
 from pigpen_spark import cache as _cache
 from pigpen_spark.cache import checkpointed as _checkpointed
 from pigpen_spark.cache import persisted as _persisted
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -1179,8 +1179,7 @@ def pagerank_cte_sql(edges_cte: str, iterations: int = 3,
 
 
 def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
-         iterations: int = 2, scale: int = 10**9,
-         checkpoint_every: int = 5) -> DataFrame:
+         iterations: int = 2, scale: int = 10**9) -> DataFrame:
     """Integer-exact HITS (Kleinberg 1999) over a directed edge list —
     hubs point at good authorities, authorities are pointed at by good
     hubs — completing the graph family next to :func:`pagerank` (global
@@ -1202,10 +1201,15 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     of the fixed computation, not convergence to the real-valued
     eigenvector.
 
-    Scale: per iteration two slim-score equi-joins against the
-    persisted edge list and two groupBys; the normalization total is a
-    1-row broadcast (crossJoin of an aggregate — never a driver
-    action).  Lineage truncates every ``checkpoint_every`` iterations.
+    Scale: per half-iteration one slim-score equi-join against the
+    persisted edge list and one groupBy, materialized by ONE eager
+    local checkpoint whose job also delivers the level's total through
+    an ``Observation`` — the divisor is then a driver scalar (like
+    pagerank's ``n``), so no total aggregate, broadcast or node-table
+    join enters the plan.  A level holds only the nodes on its side
+    (authorities: dst, hubs: src); an absent node scores 0, which is
+    exactly what it adds to the next level's sum.  ext_hits (2
+    iterations) runs 17 Spark jobs per build plus write.
 
     Returns (node, hub, authority) — one row per node in src ∪ dst."""
     if iterations < 1:
@@ -1224,52 +1228,35 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         .transform(_persisted)
         .transform(_checkpointed)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(_persisted)
-        .transform(_checkpointed)
-    )
-    hubs = nodes.select("node", F.lit(scale).cast("long").alias("h"))
-    auth = None
 
-    def _norm(raw: DataFrame, col: str) -> DataFrame:
-        # ``raw`` re-enters this plan TWICE (the grand total and the
-        # join), and the next level references the normalized score
-        # again — left lazy, the plan size doubled per half-iteration
-        # (measured 4.4k plan lines at 2 iterations) and the raw subtree
-        # executed twice per level.  The caller checkpoints each raw
-        # (an O(V) slim table) so both references read one ExistingRDD.
-        # The checkpoint is NON-eager: the broadcast build of ``tot`` is
-        # the first job over it, so one job materializes the raw blocks
-        # AND totals them — the eager form paid a separate
-        # materialization job per half-iteration (fixed job latency).
-        tot = raw.agg(F.sum("raw").alias("t"))
+    def _level(raw: DataFrame) -> tuple[DataFrame, int]:
+        # the eager checkpoint's job delivers the Observation whatever
+        # the AQE setting, so ``obs.get`` never waits on a later action
+        obs = Observation()
+        lvl = _checkpointed(raw.observe(obs, F.sum("raw").alias("t")))
+        return lvl, max(1, (obs.get["t"] or 0) // scale)
+
+    def _propagate(lvl: DataFrame, d: int, on: str, to: str) -> DataFrame:
         return (
-            nodes.join(raw, on="node", how="left")
-            .crossJoin(F.broadcast(tot))
-            .select("node", F.expr(
-                f"coalesce(raw, 0) DIV greatest(1, t DIV {scale})"
-            ).cast("long").alias(col))
+            e.join(lvl, e[on] == lvl["node"])
+            .groupBy(e[to].alias("node"))
+            .agg(F.sum(F.expr(f"raw DIV {d}")).alias("raw"))
         )
 
-    for i in range(iterations):
-        a_raw = (
-            e.join(hubs, e["src"] == hubs["node"])
-            .groupBy(e["dst"].alias("node")).agg(F.sum("h").alias("raw"))
-            .transform(_checkpointed, eager=False)
-        )
-        auth = _norm(a_raw, "a")
-        h_raw = (
-            e.join(auth, e["dst"] == auth["node"])
-            .groupBy(e["src"].alias("node")).agg(F.sum("a").alias("raw"))
-            .transform(_checkpointed, eager=False)
-        )
-        hubs = _norm(h_raw, "h")
+    auth, da = _level(e.groupBy(F.col("dst").alias("node"))
+                      .agg(F.sum(F.lit(scale).cast("long")).alias("raw")))
+    hub, dh = _level(_propagate(auth, da, "dst", "src"))
+    for _ in range(iterations - 1):
+        auth, da = _level(_propagate(hub, dh, "src", "dst"))
+        hub, dh = _level(_propagate(auth, da, "dst", "src"))
+    zero = F.lit(0).cast("long")
     return (
-        hubs.join(auth, on="node")
-        .select("node", F.col("h").alias("hub"), F.col("a").alias("authority"))
+        hub.select("node", F.expr(f"raw DIV {dh}").alias("hub"),
+                   zero.alias("authority"))
+        .unionByName(auth.select("node", zero.alias("hub"),
+                                 F.expr(f"raw DIV {da}").alias("authority")))
+        .groupBy("node")
+        .agg(F.sum("hub").alias("hub"), F.sum("authority").alias("authority"))
     )
 
 

@@ -98,24 +98,16 @@ def _fake_decode(data: bytes) -> tuple[int, int, str]:
 def decode_image_meta(df: DataFrame, id_col: str, payload_col: str = "payload") -> DataFrame:
     """Decode image metadata from a binary column via mapInPandas.
 
-    Real decoder wiring (guarded):
-
-    >>> try:
-    ...     from PIL import Image          # not present in this container
-    ... except ImportError:
-    ...     Image = None                   # falls back to _fake_decode
+    png/jpeg/gif/bmp headers are parsed for real (:func:`_image_header`);
+    any other magic goes to :func:`_fake_decode`, whatever decoders the
+    host has installed, so the output never depends on the host.
+    Corrupt or truncated headers quarantine the row as ``corrupt``.
 
     Each Arrow batch is processed as one pandas DataFrame — per-batch
     python cost is amortized over thousands of rows.
     """
-    try:  # pragma: no cover - container has no PIL
-        from PIL import Image  # noqa: F401
-        real = True
-    except ImportError:
-        real = False
-
-    return _map_rows(_payloads(df, id_col, payload_col),
-                     lambda i, b: _image_meta_row(i, b, real), IMAGE_META_SCHEMA)
+    return _map_rows(_payloads(df, id_col, payload_col), _image_meta_row,
+                     IMAGE_META_SCHEMA)
 
 
 def _image_header(data: bytes) -> tuple[int, int, str] | None:
@@ -144,15 +136,9 @@ def _image_header(data: bytes) -> tuple[int, int, str] | None:
     return None
 
 
-def _image_meta_row(rid: int, data: bytes, real: bool) -> dict:
+def _image_meta_row(rid: int, data: bytes) -> dict:
     try:
-        meta = _image_header(data)
-        if meta is None:
-            if real:  # pragma: no cover
-                raise NotImplementedError(
-                    "PIL decode path: wire Image.open(BytesIO(data))")
-            meta = _fake_decode(data)
-        w, h, fmt = meta
+        w, h, fmt = _image_header(data) or _fake_decode(data)
     except ValueError:
         # corrupt/truncated payload: metadata profiling must quarantine
         # the row, not kill the Arrow batch

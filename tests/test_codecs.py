@@ -108,6 +108,24 @@ class TestMultimodalReal:
         assert got[3] == (8 + 3 % 16, 8 + 1 % 16, "png")
         assert got[12] == (8 + 12 % 16, 8 + 4 % 16, "png")
 
+    def test_decode_image_meta_unknown_magic_ignores_installed_pil(
+            self, spark, monkeypatch):
+        # an importable PIL must not change the output: unknown magic
+        # still goes to the fake decoder, never fails the task
+        import sys
+        import types
+
+        from pigpen_spark.functions import multimodal as M
+
+        pil = types.ModuleType("PIL")
+        pil.Image = types.ModuleType("PIL.Image")
+        monkeypatch.setitem(sys.modules, "PIL", pil)
+        monkeypatch.setitem(sys.modules, "PIL.Image", pil.Image)
+        data = b"RIFF\x00\x00\x00\x00WEBPVP8 "
+        df = spark.createDataFrame([(1, bytearray(data))], "id long, payload binary")
+        r = M.decode_image_meta(df, "id").collect()[0]
+        assert (r.width, r.height, r.format) == M._fake_decode(data)
+
     def test_audio_features_wav(self, spark):
         from pigpen_spark.functions import multimodal as M
 

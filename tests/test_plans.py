@@ -374,12 +374,13 @@ def test_wordpiece_encode_single_python_crossing(plans):
     assert "Exchange" not in p
 
 
-def test_hits_totals_broadcast_and_no_probe_shuffle_blowup(plans):
-    # each normalization total is a 1-row broadcast (nested-loop join of
-    # an aggregate), never a driver action; per iteration the score
-    # tables join the edge list as hash/merge equi-joins
+def test_hits_equi_joins_only(plans):
+    # each level's normalization total arrives with the level's own
+    # materialization job (an Observation), so no total is broadcast
+    # into a nested-loop join; the score tables join the edge list as
+    # hash/merge equi-joins, never a cartesian
     p = plans("ext_hits")
-    assert "BroadcastNestedLoopJoin" in p
+    assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
 
 

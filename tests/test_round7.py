@@ -299,6 +299,61 @@ class TestHits:
         leaf_auth = {out[i][1] for i in range(1, 6)}
         assert len(leaf_auth) == 1 and leaf_auth.pop() > 0
 
+    @staticmethod
+    def _duckdb(edges, iterations):
+        import duckdb
+
+        from pigpen_spark.functions import dedup as D
+
+        rows = ", ".join(f"({u}, {v})" for u, v in edges) or "(0, 0)"
+        cte = (f"edges AS (SELECT src::BIGINT AS src, dst::BIGINT AS dst FROM "
+               f"(VALUES {rows}) t(src, dst){'' if edges else ' WHERE false'})")
+        con = duckdb.connect()
+        try:
+            return {r[0]: (r[1], r[2]) for r in
+                    con.execute(D.hits_cte_sql(cte, iterations)).fetchall()}
+        finally:
+            con.close()
+
+    @pytest.mark.parametrize("iterations", [1, 2])
+    @pytest.mark.parametrize("edges", [
+        [],                                 # no nodes at all
+        [(0, 0), (0, 1), (1, 2)],           # self-loop
+        [(0, 1), (1, 2), (2, 0), (2, 1)],   # every node both src and dst
+        [(0, 2), (1, 2), (1, 3), (4, 1)],   # 0/4 source-only, 2/3 sink-only
+    ], ids=["empty", "self_loop", "cycle", "sources_and_sinks"])
+    def test_edge_cases_match_model_and_oracle(self, spark, edges, iterations):
+        from pigpen_spark.functions import dedup as D
+
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {r["node"]: (r["hub"], r["authority"])
+               for r in D.hits(df, iterations=iterations).collect()}
+        h, a = self._model(edges, iterations=iterations)
+        want = {v: (h[v], a[v]) for v in h}
+        assert got == want
+        assert self._duckdb(edges, iterations) == want
+
+    def test_ext_hits_job_count(self, spark, sf_dir):
+        # each level is ONE eager checkpoint that also delivers its total
+        # (no total aggregate, broadcast or node-table join per level):
+        # 17 jobs for the 2-iteration build plus write
+        from pigpen_spark import catalog, catalog_ext  # noqa: F401
+        from pigpen_spark.tuning import clear_engine_caches
+
+        build = catalog.queries()["ext_hits"]
+        build(spark, sf_dir)  # warm the table listing out of the count
+        clear_engine_caches(spark)
+        sc = spark.sparkContext
+        sc.setJobGroup("test-hits-jobs", "ext_hits build + write")
+        try:
+            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            jobs = sc.statusTracker().getJobIdsForGroup("test-hits-jobs")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            clear_engine_caches(spark)
+        assert 0 < len(jobs) <= 18
+
 
 class TestHilbertKey:
     def test_lut_matches_classic_algorithm(self):

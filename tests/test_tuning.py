@@ -52,3 +52,39 @@ def test_skew_report_finds_hot_key(spark):
     assert rep["suggested_salt"] == 4  # ceil(80 / 25)
     empty = skew_report(df.filter("id < 0"), "k")
     assert empty["total_rows"] == 0 and empty["suggested_salt"] == 1
+
+
+def test_python_workers_keep_zip_directories(spark):
+    # a worker that has unpickled an engine UDF no longer holds a plain
+    # zipimporter, whose directory importlib.invalidate_caches() would
+    # re-read at every task start; a pyspark submodule the worker has not
+    # loaded yet still imports
+    import pigpen_spark.functions.multimodal as M
+
+    fresh = ("pyspark.sql.avro.functions", "pyspark.sql.protobuf.functions",
+             "pyspark.ml.param", "pyspark.ml.linalg", "pyspark.mllib.common",
+             "pyspark.sql.pandas.map_ops", "pyspark.sql.observation",
+             "pyspark.resource.profile")
+
+    def probe(batches):
+        import importlib
+        import os
+        import sys
+        import zipimport
+
+        M.np  # the closure makes the worker import pigpen_spark
+        plain = sum(type(f) is zipimport.zipimporter
+                    for f in sys.path_importer_cache.values())
+        name = next((n for n in fresh if n not in sys.modules), "")
+        if name:
+            importlib.import_module(name)
+        for b in batches:
+            yield b.assign(pid=os.getpid(), plain=plain, imported=name)
+
+    df = spark.range(0, 16, numPartitions=8).mapInPandas(
+        probe, "id long, pid long, plain long, imported string")
+    rows = df.collect() + df.collect()
+    assert {r.plain for r in rows} == {0}
+    assert any(r.imported for r in rows)
+    # tasks ran after an earlier task in the same worker process
+    assert len({r.pid for r in rows}) < len(rows)
