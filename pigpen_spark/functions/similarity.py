@@ -1,19 +1,28 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Extension surface (BASELINE.json north star).  Two paths:
+Extension surface (BASELINE.json north star).  Every approximate search
+here is an **index build followed by a serve step**:
 
-- **brute-force cosine top-k** — the exact baseline: query×corpus join,
-  JVM-side zip_with/aggregate dot products, per-query window top-k.  At
-  100 TB this is the pattern for small query sets against a broadcastable
-  query side; the corpus is never collected.
-- **random-hyperplane LSH** — the scale path: per-row bucket signature
-  (sign pattern of dot products with deterministic md5-derived
-  hyperplanes), candidates restricted to equal buckets.  Bucket compute is
-  per-row Catalyst HOFs; candidate generation an equi-join on the bucket
-  key.
+- **build** turns the corpus into index data once: LSH bucket
+  signatures (:func:`lsh_index`), PQ codes + codebook (:func:`pq_index`),
+  IVF-PQ inverted lists + codebook + coarse centroids
+  (:func:`ivf_pq_index`), OPQ codes + codebook + rotation
+  (:func:`opq_index`).  The quantizers are driver artifacts (tiny) and
+  the stored-artifact tables have one schema each, written only here
+  (the index streams in :mod:`pigpen_spark.streaming.core` reuse them).
+- **serve** scores a query batch against that data: the ``*_against``
+  functions read the artifacts off storage; the inline forms
+  (:func:`pq_adc_topk`, :func:`ivf_pq_topk`) hand the freshly built
+  artifacts to the SAME serve step in memory, so inline and stored
+  search are one code path (build once, serve many).
+- :func:`brute_force_topk` is the exact baseline every approximate form
+  is measured against (:func:`ann_recall`).
 
-Scores are computed in float64 with identical association order in the
-DuckDB oracles; ranking ties broken by id so top-k is deterministic.
+Every kernel folds dot products and ADC lookups strictly left to right
+in float64 — the association order of the DuckDB oracles and of the
+retained ``*_expr`` reference forms — rounds JVM-side with
+``round(·, 6)``, and ranks with ties broken by id, so top-k is
+deterministic and hash-exact across engines.
 """
 
 from __future__ import annotations
@@ -83,6 +92,121 @@ def cosine_sql(a: str, b: str) -> str:
     return f"({dot_sql(a, b)}) / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
 
 
+# -- shared search pieces ----------------------------------------------------
+
+
+def _topk(scored: DataFrame, k: int, by: str = "score",
+          ascending: bool = False) -> DataFrame:
+    """Per-query top-k window of every search: rank each ``q_id``'s rows
+    by ``by`` (descending similarity, or ascending ADC distance), ties
+    by ``n_id``, keep ranks ≤ k → (q_id, n_id, by, rank long)."""
+    order = F.col(by).asc() if ascending else F.col(by).desc()
+    w = Window.partitionBy("q_id").orderBy(order, F.col("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", by, F.col("rank").cast("long").alias("rank"))
+    )
+
+
+_COLLECT_NOTE = ("this operator driver-collects the queries "
+                 "(bounded-artifact contract); ")
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str,
+                     max_queries: int, who: str, note: str = _COLLECT_NOTE):
+    """Driver-collect a bounded query side → (ids, float vectors, id SQL
+    type).  The bound is LOUD: more than ``max_queries`` rows raise
+    instead of a silent driver OOM, and so do NULL query vectors."""
+    qrows = (
+        queries.select(
+            F.col(id_col).alias("q_id"), to_double(F.col(vec_col)).alias("q_vec")
+        ).limit(max_queries + 1).collect()
+    )
+    if len(qrows) > max_queries:
+        raise ValueError(
+            f"{who}: query side exceeds max_queries={max_queries} — {note}"
+            "shard the query set or raise max_queries explicitly")
+    if any(r["q_vec"] is None for r in qrows):
+        raise ValueError(f"{who}: NULL query vector — filter "
+                         "NULL vecs before querying")
+    return ([r["q_id"] for r in qrows],
+            [[float(x) for x in r["q_vec"]] for r in qrows],
+            queries.schema[id_col].dataType.simpleString())
+
+
+def _vec_base(corpus: DataFrame, id_col: str, vec_col: str,
+              nrm=None) -> DataFrame:
+    """The persisted (id, vec double[], nrm) base of a corpus-side search:
+    spread across cores, norms computed once per vector (Arrow
+    :func:`arrow_norm` unless the expression-form reference passes
+    :func:`norm`), persisted because every caller reads it more than
+    once (cell assignment, candidate fetch, first-N centroids)."""
+    return (
+        spread(corpus)
+        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
+        .withColumn("nrm", (nrm or arrow_norm)(F.col("vec")))
+        .transform(_persisted)
+    )
+
+
+def _cell_table(base: DataFrame, n_centroids: int,
+                centroids: list[list[float]] | None = None) -> DataFrame:
+    """Coarse-quantizer cell table (cent_id int, cent_vec, cent_nrm) —
+    also the stored centroid artifact of :func:`ivf_pq_index`.  Trained
+    ``centroids`` (driver literals, enumerated 0..n-1) if given, else the
+    deterministic first ``n_centroids`` vectors of the persisted ``base``
+    by id (cell labels are those corpus ids)."""
+    if centroids is not None:
+        return base.sparkSession.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+            "cent_id int, cent_vec array<double>",
+        ).withColumn("cent_nrm", norm(F.col("cent_vec")))
+    return (
+        base.orderBy("id").limit(n_centroids)
+        .select(F.col("id").cast("int").alias("cent_id"),
+                F.col("vec").alias("cent_vec"), F.col("nrm").alias("cent_nrm"))
+    )
+
+
+def _sub_dim(dim: int, m: int, who: str) -> int:
+    """Subspace width ``dim // m`` of a PQ split; ``m`` must divide
+    ``dim``."""
+    if dim % m != 0:
+        raise ValueError(f"{who}: m ({m}) must divide dim ({dim})")
+    return dim // m
+
+
+def _fold_dot(A, B):
+    """All-pairs dot products A·Bᵀ (a × b float64) as the strict left
+    fold — ``acc += A[:, j] ⊗ B[:, j]`` per dimension j, one IEEE
+    multiply then one add per element, no FMA, no reassociation (a BLAS
+    matmul would reassociate and could flip near-tie ranks).  The bit
+    contract of every block kernel (:func:`_arrow_cosine_raw`)."""
+    import numpy as np
+
+    acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
+    for j in range(B.shape[1]):
+        acc += A[:, j, None] * B[None, :, j]
+    return acc
+
+
+def _pair_frame(q_ids, n_ids, exclude_self: bool, **scores):
+    """Slim q-major (q_id, n_id, *scores) rows of a q × n score block;
+    ``scores`` are q × n matrices.  ``exclude_self`` drops the pairs
+    whose ids are equal."""
+    import numpy as np
+    import pandas as pd
+
+    cols = {"q_id": np.repeat(q_ids, len(n_ids)),
+            "n_id": np.tile(n_ids, len(q_ids)),
+            **{name: s.ravel() for name, s in scores.items()}}
+    if exclude_self:
+        keep = cols["q_id"] != cols["n_id"]
+        cols = {name: v[keep] for name, v in cols.items()}
+    return pd.DataFrame(cols)
+
+
 def brute_force_topk(
     corpus: DataFrame, queries: DataFrame, id_col: str = "vec_id",
     vec_col: str = "embedding", k: int = 5,
@@ -103,30 +227,14 @@ def brute_force_topk(
     materialize.  NULL query vectors raise; NaN elements are out of
     contract (see :func:`_stack_checked`)."""
     import numpy as np
-    import pandas as pd
 
-    qrows = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            to_double(F.col(vec_col)).alias("q_vec"),
-        ).limit(max_queries + 1).collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk: query side exceeds max_queries={max_queries} "
-            "— this operator driver-collects the queries (bounded-artifact "
-            "contract); shard the query set or raise max_queries explicitly")
-    q_ids_drv = [r["q_id"] for r in qrows]
-    if any(r["q_vec"] is None for r in qrows):
-        raise ValueError("brute_force_topk: NULL query vector — filter "
-                         "NULL vecs before querying")
-    q_vecs = [[float(x) for x in r["q_vec"]] for r in qrows]
+    q_ids_drv, q_vecs, q_type = _collect_queries(
+        queries, id_col, vec_col, max_queries, "brute_force_topk")
     c = (
         spread(corpus)
         .select(F.col(id_col).alias("n_id"), to_double(F.col(vec_col)).alias("n_vec"))
         .withColumn("n_nrm", arrow_norm(F.col("n_vec")))
     )
-    q_type = queries.schema[id_col].dataType.simpleString()
     n_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"q_id {q_type}, n_id {n_type}, dot double, den double"
 
@@ -141,16 +249,9 @@ def brute_force_topk(
             if pdf.empty or not len(q_vecs):
                 continue
             V = _stack_vecs(pdf["n_vec"], "brute_force_topk")
-            acc = np.zeros((len(q_vecs), len(pdf)), dtype=np.float64)
-            for j in range(V.shape[1]):   # strict left fold — bit contract
-                acc += Q[:, j, None] * V[None, :, j]
             den = q_nrm[:, None] * pdf["n_nrm"].to_numpy(dtype=np.float64)[None, :]
-            qq = np.repeat(q_ids, len(pdf))
-            nn = np.tile(pdf["n_id"].to_numpy(), len(q_vecs))
-            keep = qq != nn               # self-pair exclusion
-            yield pd.DataFrame({
-                "q_id": qq[keep], "n_id": nn[keep],
-                "dot": acc.ravel()[keep], "den": den.ravel()[keep]})
+            yield _pair_frame(q_ids, pdf["n_id"].to_numpy(), True,
+                              dot=_fold_dot(Q, V), den=den)
 
     scored = (
         c.select("n_id", "n_vec", "n_nrm")
@@ -158,12 +259,7 @@ def brute_force_topk(
         .select("q_id", "n_id",
                 F.round(F.try_divide(F.col("dot"), F.col("den")), 6).alias("score"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(scored, k)
 
 
 # -- random-hyperplane LSH --------------------------------------------------
@@ -246,13 +342,10 @@ def lsh_bucket(vec, n_planes: int, dim: int, plane_offset: int = 0,
                 raise ValueError(
                     f"lsh_bucket: dim={dim} != vector length {got}")
             arrs.append(np.asarray(v, dtype=np.float64))
-        V = np.stack(arrs)
-        bits = np.empty((len(vs), len(planes)), dtype="<U1")
-        for i, pl in enumerate(planes):
-            acc = np.zeros(len(vs), dtype=np.float64)
-            for j in range(dim):   # strict left fold — see bit contract
-                acc += V[:, j] * pl[j]
-            bits[:, i] = np.where(acc >= 0.0, "1", "0")
+        # vectors × planes, strict left fold — see bit contract
+        P = np.asarray(planes, dtype=np.float64).reshape(len(planes), dim)
+        acc = _fold_dot(np.stack(arrs), P)
+        bits = np.where(acc >= 0.0, "1", "0")
         return pd.Series(["".join(row) for row in bits])
 
     _bucket.__annotations__ = {"vs": pd.Series, "return": pd.Series}
@@ -534,12 +627,7 @@ def lsh_topk(
             a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") != F.col("b.id")))
             .select(F.col("a.id").alias("q_id"), F.col("b.id").alias("n_id"), score.alias("score"))
         )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(scored, k)
 
 
 def ivf_topk(
@@ -561,17 +649,8 @@ def ivf_topk(
     cell.  Swap the centroid source for real k-means output (e.g.
     pyspark.ml KMeans) without touching the plan.
     """
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
-    cents = (
-        base.orderBy("id").limit(n_centroids)
-        .select(F.col("id").alias("cent_id"), F.col("vec").alias("cent_vec"), F.col("nrm").alias("cent_nrm"))
-    )
-    return _ivf_search(base, cents, k, n_probe)
+    base = _vec_base(corpus, id_col, vec_col)
+    return _ivf_search(base, _cell_table(base, n_centroids), k, n_probe)
 
 
 #: Full-fit guard for :func:`ivf_topk_kmeans`: an UNCAPPED pyspark.ml
@@ -609,15 +688,7 @@ def ivf_topk_kmeans(
 
     Non-SQL-expressible (iterative training) — no DuckDB oracle; tests
     assert recall against :func:`brute_force_topk` instead."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
+    base = _vec_base(corpus, id_col, vec_col)
     if train_fraction >= 1.0 and not allow_full_fit:
         n = base.count()
         if n > _FULL_FIT_CAP:
@@ -627,23 +698,30 @@ def ivf_topk_kmeans(
                 "training sample (see ext_ann_ivf_kmeans_auto's "
                 "count-derived sizing), or allow_full_fit=True to force "
                 "the demonstration instrument")
-    train = base if train_fraction >= 1.0 else base.sample(train_fraction, seed=seed)
+    centers = _kmeans_centers(base, n_centroids, train_fraction, seed, max_iter)
+    return _ivf_search(base, _cell_table(base, n_centroids, centers), k, n_probe)
+
+
+def _kmeans_centers(frame: DataFrame, n_centroids: int, train_fraction: float,
+                    seed: int, max_iter: int) -> list[list[float]]:
+    """pyspark.ml KMeans centers of ``frame``'s ``vec`` column, fit on
+    all of it or on a ``train_fraction`` sample (the shared training step
+    of :func:`ivf_topk_kmeans` and :func:`train_coarse_centroids`)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    train = frame if train_fraction >= 1.0 else frame.sample(train_fraction, seed=seed)
     # persist the training features for the fit: KMeans runs kmeans||
     # init + max_iter Lloyd passes, EACH rescanning its input — uncached,
-    # every pass re-runs the sample + array_to_vector + the base's
-    # Python-norm chain (mllib itself warns "input not directly cached").
+    # every pass re-runs the sample + array_to_vector + whatever produced
+    # the vectors (mllib itself warns "input not directly cached").
     # Scoped: the fit is synchronous, so the cache dies right after.
     feats = train.select(array_to_vector(F.col("vec")).alias("features")).persist()
     try:
         model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
     finally:
         feats.unpersist()
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cent_id int, cent_vec array<double>",
-    ).withColumn("cent_nrm", norm(F.col("cent_vec")))
-    return _ivf_search(base, cents, k, n_probe)
+    return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
 def train_coarse_centroids(
@@ -656,19 +734,8 @@ def train_coarse_centroids(
     centroid tables, shaped for :func:`ivf_pq_topk`'s
     ``coarse_centroids`` parameter.  Same train-on-a-sample posture as
     :func:`ivf_topk_kmeans`."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     base = spread(corpus).select(to_double(F.col(vec_col)).alias("vec"))
-    train = base if train_fraction >= 1.0 else base.sample(train_fraction, seed=seed)
-    # cached for the fit: kmeans|| init + max_iter Lloyd passes each
-    # rescan the input (see ivf_topk_kmeans)
-    feats = train.select(array_to_vector(F.col("vec")).alias("features")).persist()
-    try:
-        model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(feats)
-    finally:
-        feats.unpersist()
-    return [[float(x) for x in c] for c in model.clusterCenters()]
+    return _kmeans_centers(base, n_centroids, train_fraction, seed, max_iter)
 
 
 def nearest_cells(
@@ -720,15 +787,12 @@ def nearest_cells(
         C = np.asarray(cvecs, dtype=np.float64)          # k × d
         cn = np.asarray(cnrms, dtype=np.float64)         # k
         ids = np.asarray(cent_ids, dtype=np.int64)
-        n_cents, d = C.shape
         for pdf in batches:
             if pdf.empty:
                 continue
             V = _stack_vecs(pdf[vec], "nearest_cells")
             nr = pdf[nrm].to_numpy(dtype=np.float64)
-            acc = np.zeros((len(pdf), n_cents))
-            for j in range(d):   # strict left fold — see bit contract above
-                acc += V[:, j, None] * C[None, :, j]
+            acc = _fold_dot(V, C)   # strict left fold — see bit contract above
             denom = nr[:, None] * cn[None, :]
             with np.errstate(divide="ignore", invalid="ignore"):
                 csim = np.where(denom != 0.0, acc / denom, np.nan)
@@ -784,13 +848,7 @@ def _ivf_search(base: DataFrame, cents: DataFrame, k: int, n_probe: int) -> Data
         .select("cell", F.col("id").alias("q_id"), F.col("vec").alias("q_vec"),
                 F.col("nrm").alias("q_nrm"))
     )
-    cand = _cogroup_scored(probes, assigned, "cell")
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(_cogroup_scored(probes, assigned, "cell"), k)
 
 
 def _cogroup_scored(probes: DataFrame, members: DataFrame, key: str,
@@ -848,19 +906,9 @@ def _cogroup_scored(probes: DataFrame, members: DataFrame, key: str,
         for lo in range(0, len(mdf), tile):
             hi = min(lo + tile, len(mdf))
             M = _stack_vecs(m_vals[lo:hi], "_cogroup_scored")
-            acc = np.zeros((nq, hi - lo), dtype=np.float64)
-            for j in range(Q.shape[1]):   # strict left fold — bit contract
-                acc += Q[:, j, None] * M[None, :, j]
             den = q_nrm[:, None] * m_nrm_all[None, lo:hi]
-            q_ids = np.repeat(q_ids_all, hi - lo)
-            n_ids = np.tile(m_ids_all[lo:hi], nq)
-            dots, dens = acc.ravel(), den.ravel()
-            if exclude_self:
-                keep = q_ids != n_ids
-                q_ids, n_ids = q_ids[keep], n_ids[keep]
-                dots, dens = dots[keep], dens[keep]
-            outs.append(pd.DataFrame(
-                {"q_id": q_ids, "n_id": n_ids, "dot": dots, "den": dens}))
+            outs.append(_pair_frame(q_ids_all, m_ids_all[lo:hi], exclude_self,
+                                    dot=_fold_dot(Q, M), den=den))
         return pd.concat(outs, ignore_index=True)
 
     return (
@@ -920,12 +968,7 @@ def embedding_near_dup_pairs(
     cap-length bucket (ext_embed_near_dup_auto)."""
     n_planes = resolve_planes(n_planes, corpus, *auto_sizing)
     stride = plane_stride if plane_stride is not None else n_planes
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
+    base = _vec_base(corpus, id_col, vec_col)
     # expression dot, deliberately NOT the Arrow scorer: this operator
     # dedups SLIM id pairs first and fetches vectors by id-join, so both
     # vectors are JVM-resident at scoring time — a row-wise Arrow scorer
@@ -1064,25 +1107,10 @@ def semantic_dedup(
     bounds the Σ|cell|² pair work at scale."""
     from pigpen_spark.functions.dedup import dedup_keep
 
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
-    if centroids is not None:
-        cents = corpus.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "cent_id int, cent_vec array<double>",
-        ).withColumn("cent_nrm", norm(F.col("cent_vec")))
-    else:
-        cents = (
-            base.orderBy("id").limit(n_centroids)
-            .select(F.col("id").alias("cent_id"), F.col("vec").alias("cent_vec"),
-                    F.col("nrm").alias("cent_nrm"))
-        )
+    base = _vec_base(corpus, id_col, vec_col)
     assigned = (
-        nearest_cells(base, cents, "id", "vec", "nrm", max_rank=1)
+        nearest_cells(base, _cell_table(base, n_centroids, centroids),
+                      "id", "vec", "nrm", max_rank=1)
         .select("id", F.col("cent_id").alias("cell"))
         .join(base, "id")
         .transform(_persisted)
@@ -1135,9 +1163,7 @@ def _intra_cell_scored_pairs(assigned: DataFrame) -> DataFrame:
         outs = []
         for lo in range(0, m - 1, tile):
             hi = min(lo + tile, m)
-            acc = np.zeros((hi - lo, m - lo), dtype=np.float64)
-            for j in range(V.shape[1]):   # strict left fold — bit contract
-                acc += V[lo:hi, j, None] * V[None, lo:, j]
+            acc = _fold_dot(V[lo:hi], V[lo:])   # strict left fold — bit contract
             den = nr[lo:hi, None] * nr[None, lo:]
             iu, ju = np.nonzero(
                 np.arange(lo, hi)[:, None] < np.arange(lo, m)[None, :])
@@ -1244,14 +1270,15 @@ def scalar_quantize_sql(table: str, id_col: str, vec_col: str,
     """
 
 
-def _default_codebook(corpus: DataFrame, id_col: str, vec_col: str,
-                      n_codes: int) -> list[list[float]]:
-    """The deterministic stand-in codebook shared by the PQ family: the
-    first ``n_codes`` corpus vectors by id, collected driver-side (tiny —
-    n_codes × dim doubles).  K-means output replaces it as data."""
+def _first_by_id(corpus: DataFrame, id_col: str, vec_col: str,
+                 n: int) -> list[list[float]]:
+    """The first ``n`` corpus vectors by id, collected driver-side — the
+    deterministic stand-in codebook shared by the PQ family (tiny —
+    n_codes × dim doubles; k-means output replaces it as data) and the
+    bounded training sample of :func:`train_opq_rotation`."""
     rows = (
         corpus.select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("v"))
-        .orderBy("id").limit(n_codes).collect()
+        .orderBy("id").limit(n).collect()
     )
     return [[float(x) for x in r["v"]] for r in rows]
 
@@ -1267,7 +1294,7 @@ def train_pq_codebook(
     subspace ``j`` of every training vector is clustered into
     ``n_codes`` centers, independently of the other subspaces.
 
-    Returns the SAME driver-artifact format :func:`_default_codebook`
+    Returns the SAME driver-artifact format :func:`_first_by_id`
     produces (``n_codes`` full-dim vectors): entry ``i`` concatenates
     center ``i`` of each subspace's codebook, because every consumer
     (:func:`product_quantize`, :func:`_adc_tables`) slices codebook
@@ -1288,9 +1315,7 @@ def train_pq_codebook(
 
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"train_pq_codebook: m ({m}) must divide dim ({dim})")
-    d = dim // m
+    d = _sub_dim(dim, m, "train_pq_codebook")
     base = corpus.select(to_double(F.col(vec_col)).alias("vec"))
     train = base if train_fraction >= 1.0 else base.sample(train_fraction, seed=seed)
     train = train.transform(_persisted)  # m fits each scan it once
@@ -1382,6 +1407,25 @@ def _np_pq_codes(V, codebook: list[list[float]], m: int, d: int):
     return codes, sse
 
 
+def _adc_sum(T, codes):
+    """ADC distances (q × n) of query tables ``T`` (q × m × n_codes)
+    against PQ ``codes`` (n × m): the m table lookups summed
+    left-associated in subspace order — the same arithmetic as the
+    expression form's lookup sum (:func:`_adc_tables`)."""
+    acc = None
+    for j in range(T.shape[1]):                      # strict left fold
+        t = T[:, j, codes[:, j]]                     # q × n lookups
+        acc = t if acc is None else acc + t
+    return acc
+
+
+def _codes_matrix(values):
+    """Stack a pandas column of stored ``codes`` arrays into n × m ints."""
+    import numpy as np
+
+    return np.stack([np.asarray(c, dtype=np.int64) for c in values])
+
+
 def _stack_vecs(values, who: str):
     """Stack a pandas column of vectors into an (n × d) float64 matrix
     with LOUD errors on NULL or ragged vectors (no dim contract — the
@@ -1420,6 +1464,24 @@ def _stack_checked(values, dim: int, who: str):
     return np.stack(arrs)
 
 
+def _pq_setup(corpus: DataFrame, id_col: str, vec_col: str, dim: int | None,
+              m: int, n_codes: int, codebook: list[list[float]] | None):
+    """Shared prologue of :func:`product_quantize` and its expression
+    reference → (dim, subspace width, spread (id, vec) base, codebook
+    checked against dim)."""
+    if dim is None:
+        dim = infer_dim(corpus, vec_col)
+    d = _sub_dim(dim, m, "product_quantize")
+    base = spread(corpus).select(
+        F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec")
+    )
+    if codebook is None:
+        codebook = _first_by_id(corpus, id_col, vec_col, n_codes)
+    if any(len(c) != dim for c in codebook):
+        raise ValueError("product_quantize: codebook entries must have length dim")
+    return dim, d, base, codebook
+
+
 def product_quantize(
     corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     dim: int | None = None, m: int = 8, n_codes: int = 16,
@@ -1453,18 +1515,8 @@ def product_quantize(
     wrong-length vectors raise (:func:`_stack_checked`)."""
     import pandas as pd
 
-    if dim is None:
-        dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"product_quantize: m ({m}) must divide dim ({dim})")
-    d = dim // m
-    base = spread(corpus).select(
-        F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec")
-    )
-    if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
-    if any(len(c) != dim for c in codebook):
-        raise ValueError("product_quantize: codebook entries must have length dim")
+    dim, d, base, codebook = _pq_setup(corpus, id_col, vec_col, dim, m,
+                                       n_codes, codebook)
     cb = [list(map(float, c)) for c in codebook]
     id_type = base.schema["id"].dataType.simpleString()
     out_schema = f"id {id_type}, codes array<int>, mse double"
@@ -1494,18 +1546,8 @@ def product_quantize_expr(
     differential-test reference form (bit-equality vs the Arrow kernel
     pinned by TestArrowPqCodes) and the shape
     :func:`product_quantize_sql` mirrors in DuckDB."""
-    if dim is None:
-        dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"product_quantize: m ({m}) must divide dim ({dim})")
-    d = dim // m
-    base = spread(corpus).select(
-        F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec")
-    )
-    if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
-    if any(len(c) != dim for c in codebook):
-        raise ValueError("product_quantize: codebook entries must have length dim")
+    dim, d, base, codebook = _pq_setup(corpus, id_col, vec_col, dim, m,
+                                       n_codes, codebook)
 
     dists = [
         F.array(*[_subspace_dist2("vec", j, d, c) for c in codebook])
@@ -1528,29 +1570,9 @@ def product_quantize_sql(table: str, id_col: str, vec_col: str,
     """DuckDB oracle for :func:`product_quantize` with the default
     first-``n_codes``-by-id codebook, recomputed in SQL (identical
     float64 values and operation order as the collected literals)."""
-    d = dim // m
-
-    def dists(j: int) -> str:
-        lo = j * d + 1
-        return (
-            "[list_sum([(vec[i] - c[i]) * (vec[i] - c[i]) "
-            f"for i in range({lo}, {lo + d})]) for c in cbs]"
-        )
-
-    code = ", ".join(
-        f"(list_position({dists(j)}, list_min({dists(j)})) - 1)::INT"
-        for j in range(m)
-    )
-    sse = " + ".join(f"list_min({dists(j)})" for j in range(m))
+    ctes, code, sse, _ = _pq_sql(table, id_col, vec_col, dim, m, n_codes)
     return f"""
-    WITH base AS (
-      SELECT {id_col} AS id, [x::DOUBLE for x in {vec_col}] AS vec FROM {table}
-    ),
-    cb AS (
-      SELECT list(vec ORDER BY id) AS cbs FROM (
-        SELECT id, vec FROM base ORDER BY id LIMIT {n_codes}
-      )
-    )
+    WITH {ctes}
     SELECT id AS {id_col},
            [{code}] AS codes,
            ({sse}) / {float(dim)!r} AS mse
@@ -1593,73 +1615,57 @@ def pq_adc_topk(
     queries, but an EXTERNAL query set whose ids coincidentally overlap
     corpus ids would silently lose that candidate: pass
     ``exclude_self=False`` when query ids aren't corpus row ids."""
-    import numpy as np
-    import pandas as pd
-
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"pq_adc_topk: m ({m}) must divide dim ({dim})")
-    d = dim // m
+    d = _sub_dim(dim, m, "pq_adc_topk")
     if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
+        codebook = _first_by_id(corpus, id_col, vec_col, n_codes)
     cb = [list(map(float, c)) for c in codebook]
-    qrows = (
-        queries.select(
-            F.col(id_col).alias("q_id"), to_double(F.col(vec_col)).alias("q_vec")
-        ).limit(max_queries + 1).collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_adc_topk: query side exceeds max_queries={max_queries} — "
-            "this operator driver-collects the queries (bounded-artifact "
-            "contract); shard the query set or raise max_queries explicitly")
-    q_ids_drv = [r["q_id"] for r in qrows]
-    if any(r["q_vec"] is None for r in qrows):
-        raise ValueError("pq_adc_topk: NULL query vector — filter "
-                         "NULL vecs before querying")
-    q_vecs = [[float(x) for x in r["q_vec"]] for r in qrows]
+    q_ids, q_vecs, q_type = _collect_queries(
+        queries, id_col, vec_col, max_queries, "pq_adc_topk")
     base = spread(corpus).select(
         F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec")
     )
-    q_type = queries.schema[id_col].dataType.simpleString()
-    n_type = corpus.schema[id_col].dataType.simpleString()
+
+    def codes_of(pdf):   # the fused pass: each batch is coded in-kernel
+        V = _stack_checked(pdf["vec"], dim, "pq_adc_topk")
+        return _np_pq_codes(V, cb, m, d)[0]
+
+    return _adc_scan(base, q_ids, q_vecs, q_type, cb, m, d, k,
+                     exclude_self, codes_of)
+
+
+def _adc_scan(src: DataFrame, q_ids, q_vecs, q_type: str,
+              cb: list[list[float]], m: int, d: int, k: int,
+              exclude_self: bool, codes_of) -> DataFrame:
+    """The one driver-collected ADC scan, shared by :func:`pq_adc_topk`
+    and :func:`pq_topk_against`: the collected queries' ADC tables are
+    built once per task (:func:`_np_adc_tables`), each ``src`` batch
+    (``id`` plus whatever ``codes_of(pdf)`` turns into n × m codes —
+    raw vectors coded in-kernel, or the stored ``codes`` column) is
+    scored by :func:`_adc_sum` into slim (q_id, n_id, araw) rows, and
+    ``round(·, 6)`` + the ascending-distance top-k stay JVM-side."""
+    import numpy as np
+
+    n_type = src.schema["id"].dataType.simpleString()
     out_schema = f"q_id {q_type}, n_id {n_type}, araw double"
 
     def score_batches(batches):
         if not q_vecs:
             return
-        Q = np.asarray(q_vecs, dtype=np.float64)
-        T = _np_adc_tables(Q, cb, m, d)            # q × m × n_codes
-        q_ids = np.asarray(q_ids_drv)
-        nq = len(q_vecs)
+        T = _np_adc_tables(np.asarray(q_vecs, dtype=np.float64), cb, m, d)
+        q_ids_np = np.asarray(q_ids)
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = _stack_checked(pdf["vec"], dim, "pq_adc_topk")
-            codes, _ = _np_pq_codes(V, cb, m, d)   # n × m
-            acc = None
-            for j in range(m):                     # strict left fold
-                t = T[:, j, codes[:, j]]           # q × n lookups
-                acc = t if acc is None else acc + t
-            qq = np.repeat(q_ids, len(pdf))
-            nn = np.tile(pdf["id"].to_numpy(), nq)
-            araw = acc.ravel()
-            if exclude_self:
-                keep = qq != nn
-                qq, nn, araw = qq[keep], nn[keep], araw[keep]
-            yield pd.DataFrame({"q_id": qq, "n_id": nn, "araw": araw})
+            yield _pair_frame(q_ids_np, pdf["id"].to_numpy(), exclude_self,
+                              araw=_adc_sum(T, codes_of(pdf)))
 
     scored = (
-        base.mapInPandas(score_batches, out_schema)
+        src.mapInPandas(score_batches, out_schema)
         .select("q_id", "n_id", F.round(F.col("araw"), 6).alias("adist"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adist", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(scored, k, "adist", ascending=True)
 
 
 def pq_refine_topk(
@@ -1711,12 +1717,7 @@ def _exact_rerank(short: DataFrame, queries: DataFrame, raw: DataFrame,
         .select("q_id", "n_id",
                 F.round(cosine(F.col("__qv"), F.col("__nv")), 6).alias("score"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(scored, k)
 
 
 def pq_topk_against_refined(
@@ -1741,13 +1742,14 @@ def pq_topk_against_refined(
     return _exact_rerank(short, queries, raw, id_col, vec_col, k)
 
 
-def pq_refine_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
-                       k: int = 5, refine: int = 4, m: int = 8,
-                       n_codes: int = 16,
-                       query_pred: str = "id < 10") -> str:
-    """DuckDB oracle for :func:`pq_refine_topk` (default codebook):
-    the :func:`pq_adc_topk_sql` shortlist CTE at ``k·refine``, then the
-    exact-cosine re-rank over the shortlist's raw vectors."""
+def _pq_sql(table: str, id_col: str, vec_col: str, dim: int, m: int,
+            n_codes: int, q_vec: str = "q.vec") -> tuple[str, str, str, str]:
+    """DuckDB pieces the PQ oracles share → (ctes, code, sse, adist):
+    the ``base`` (id, vec) and ``cb`` (first ``n_codes`` vectors by id)
+    CTEs, the per-row code list of ``vec`` (first minimal entry per
+    subspace, :func:`product_quantize`'s argmin), the coding SSE (the
+    subspace minima summed), and the ADC sum of ``q_vec``'s subspace
+    distance tables looked up at ``codes``."""
     d = dim // m
 
     def dists(vec: str, j: int) -> str:
@@ -1757,34 +1759,49 @@ def pq_refine_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
             f"for i in range({lo}, {lo + d})]) for c in cbs]"
         )
 
-    code = ", ".join(
-        f"(list_position({dists('vec', j)}, list_min({dists('vec', j)})) - 1)::INT"
-        for j in range(m)
-    )
-    adist = " + ".join(
-        f"({dists('q.vec', j)})[codes[{j + 1}] + 1]" for j in range(m)
-    )
-    cos = cosine_sql("qb.vec", "nb.vec")
-    return f"""
-    WITH base AS (
+    ctes = f"""base AS (
       SELECT {id_col} AS id, [x::DOUBLE for x in {vec_col}] AS vec FROM {table}
     ),
     cb AS (
       SELECT list(vec ORDER BY id) AS cbs FROM (
         SELECT id, vec FROM base ORDER BY id LIMIT {n_codes}
       )
-    ),
-    coded AS (SELECT id, [{code}] AS codes FROM base, cb),
-    q AS (SELECT id AS q_id, vec FROM base WHERE {query_pred}),
-    shortlist AS (
-      SELECT q_id, n_id FROM (
-        SELECT q.q_id, coded.id AS n_id,
-               row_number() OVER (
-                 PARTITION BY q.q_id
-                 ORDER BY round({adist}, 6) ASC, coded.id
-               ) AS arank
-        FROM coded, cb, q WHERE coded.id <> q.q_id
-      ) WHERE arank <= {k * refine}
+    )"""
+    code = ", ".join(
+        f"(list_position({dists('vec', j)}, list_min({dists('vec', j)})) - 1)::INT"
+        for j in range(m)
+    )
+    sse = " + ".join(f"list_min({dists('vec', j)})" for j in range(m))
+    adist = " + ".join(
+        f"({dists(q_vec, j)})[codes[{j + 1}] + 1]" for j in range(m)
+    )
+    return ctes, code, sse, adist
+
+
+def pq_refine_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
+                       k: int = 5, refine: int = 4, m: int = 8,
+                       n_codes: int = 16,
+                       query_pred: str = "id < 10") -> str:
+    """DuckDB oracle for :func:`pq_refine_topk` (default codebook):
+    the :func:`pq_adc_topk_sql` shortlist (at ``k·refine``) nested as a
+    CTE, then the exact-cosine re-rank over the shortlist's raw
+    vectors."""
+    inner = pq_adc_topk_sql(table, id_col, vec_col, dim, k=k * refine, m=m,
+                            n_codes=n_codes, query_pred=query_pred)
+    return _rerank_sql(inner, table, id_col, vec_col, k)
+
+
+def _rerank_sql(inner: str, table: str, id_col: str, vec_col: str,
+                k: int) -> str:
+    """DuckDB twin of :func:`_exact_rerank`: the (q_id, n_id, …)
+    shortlist query ``inner`` re-ranked by exact cosine over the raw
+    vectors of ``table``."""
+    cos = cosine_sql("qb.vec", "nb.vec")
+    return f"""
+    WITH short AS ({inner}),
+    rawv AS (
+      SELECT {id_col} AS id, [x::DOUBLE for x in {vec_col}] AS vec
+      FROM {table}
     )
     SELECT q_id, n_id, score, rank FROM (
       SELECT s.q_id, s.n_id,
@@ -1793,9 +1810,9 @@ def pq_refine_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
                PARTITION BY s.q_id
                ORDER BY round({cos}, 6) DESC, s.n_id
              ) AS rank
-      FROM shortlist s
-      JOIN base qb ON qb.id = s.q_id
-      JOIN base nb ON nb.id = s.n_id
+      FROM short s
+      JOIN rawv qb ON qb.id = s.q_id
+      JOIN rawv nb ON nb.id = s.n_id
     ) WHERE rank <= {k}
     """
 
@@ -1835,25 +1852,7 @@ def ivf_pq_refine_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
     inner = ivf_pq_topk_sql(table, id_col, vec_col, dim, k=k * refine,
                             n_centroids=n_centroids, n_probe=n_probe,
                             m=m, n_codes=n_codes, query_pred=query_pred)
-    cos = cosine_sql("qb.vec", "nb.vec")
-    return f"""
-    WITH short AS ({inner}),
-    rawv AS (
-      SELECT {id_col} AS id, [x::DOUBLE for x in {vec_col}] AS vec
-      FROM {table}
-    )
-    SELECT q_id, n_id, score, rank FROM (
-      SELECT s.q_id, s.n_id,
-             round({cos}, 6) AS score,
-             row_number() OVER (
-               PARTITION BY s.q_id
-               ORDER BY round({cos}, 6) DESC, s.n_id
-             ) AS rank
-      FROM short s
-      JOIN rawv qb ON qb.id = s.q_id
-      JOIN rawv nb ON nb.id = s.n_id
-    ) WHERE rank <= {k}
-    """
+    return _rerank_sql(inner, table, id_col, vec_col, k)
 
 
 def pq_adc_topk_expr(
@@ -1869,11 +1868,9 @@ def pq_adc_topk_expr(
     shape :func:`pq_adc_topk_sql` mirrors in DuckDB."""
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"pq_adc_topk: m ({m}) must divide dim ({dim})")
-    d = dim // m
+    d = _sub_dim(dim, m, "pq_adc_topk")
     if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
+        codebook = _first_by_id(corpus, id_col, vec_col, n_codes)
     coded = product_quantize_expr(
         corpus, id_col, vec_col, dim=dim, m=m, n_codes=n_codes, codebook=codebook
     ).select("id", "codes")
@@ -1886,12 +1883,7 @@ def pq_adc_topk_expr(
         coded.join(F.broadcast(q), pair_cond)
         .select("q_id", F.col("id").alias("n_id"), F.round(adist, 6).alias("adist"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adist", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(scored, k, "adist", ascending=True)
 
 
 def pq_adc_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
@@ -1902,31 +1894,9 @@ def pq_adc_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
     ``query_pred`` is a RAW SQL fragment spliced verbatim (it is test
     infrastructure, not a value — string values inside it must already
     be SQL-escaped, e.g. via :func:`pigpen_spark.functions.pipeline.sql_str`)."""
-    d = dim // m
-
-    def dists(vec: str, j: int) -> str:
-        lo = j * d + 1
-        return (
-            f"[list_sum([({vec}[i] - c[i]) * ({vec}[i] - c[i]) "
-            f"for i in range({lo}, {lo + d})]) for c in cbs]"
-        )
-
-    code = ", ".join(
-        f"(list_position({dists('vec', j)}, list_min({dists('vec', j)})) - 1)::INT"
-        for j in range(m)
-    )
-    adist = " + ".join(
-        f"({dists('q.vec', j)})[codes[{j + 1}] + 1]" for j in range(m)
-    )
+    ctes, code, _, adist = _pq_sql(table, id_col, vec_col, dim, m, n_codes)
     return f"""
-    WITH base AS (
-      SELECT {id_col} AS id, [x::DOUBLE for x in {vec_col}] AS vec FROM {table}
-    ),
-    cb AS (
-      SELECT list(vec ORDER BY id) AS cbs FROM (
-        SELECT id, vec FROM base ORDER BY id LIMIT {n_codes}
-      )
-    ),
+    WITH {ctes},
     coded AS (SELECT id, [{code}] AS codes FROM base, cb),
     q AS (SELECT id AS q_id, vec FROM base WHERE {query_pred})
     SELECT q_id, n_id, adist, rank FROM (
@@ -1977,44 +1947,59 @@ def ivf_pq_topk(
     the query's m×n_codes table arrays (~1 KB/pair at the defaults).
     round + rank stay JVM-side — bit-identical to
     :func:`ivf_pq_topk_expr` (the retained differential reference)."""
+    lists, cb, cents = _ivf_pq_build(
+        corpus, id_col, vec_col, dim, n_centroids, m, n_codes, codebook,
+        coarse_centroids, "ivf_pq_topk")
+    return _ivf_pq_serve(lists, cb, m, cents, queries, id_col, vec_col, k,
+                         n_probe, exclude_self)
+
+
+def _ivf_pq_build(corpus: DataFrame, id_col: str, vec_col: str,
+                  dim: int | None, n_centroids: int, m: int, n_codes: int,
+                  codebook: list[list[float]] | None,
+                  coarse_centroids: list[list[float]] | None, who: str):
+    """The one IVF-PQ index build, shared by :func:`ivf_pq_index` (which
+    stores it) and :func:`ivf_pq_topk` (which serves it in memory) →
+    ((cell, id, codes) inverted lists, codebook, cell table).  Trained
+    quantizers (k-means output) enter as literals — the full FAISS
+    IndexIVFPQ posture; the defaults are the first ``n_centroids`` /
+    ``n_codes`` corpus vectors by id."""
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"ivf_pq_topk: m ({m}) must divide dim ({dim})")
-    d = dim // m
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
-    if coarse_centroids is not None:
-        # trained coarse quantizer (k-means output) as a literal table —
-        # the full FAISS IndexIVFPQ posture, same as ivf_topk_kmeans
-        cents = corpus.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(coarse_centroids)],
-            "cent_id int, cent_vec array<double>",
-        ).withColumn("cent_nrm", norm(F.col("cent_vec")))
-    else:
-        cents = (
-            base.orderBy("id").limit(n_centroids)
-            .select(F.col("id").alias("cent_id"), F.col("vec").alias("cent_vec"),
-                    F.col("nrm").alias("cent_nrm"))
-        )
-
-    def probe_cells(frame, key: str, vec: str, nrm: str, max_rank: int):
-        # Arrow-batched assignment (nearest_cells) — one numpy pass,
-        # bit-identical ranks to the expression form; see its docstring.
-        return nearest_cells(frame, cents, key, vec, nrm, max_rank).select(
-            key, F.col("cent_id").alias("cell")
-        )
-
+    _sub_dim(dim, m, who)
+    base = _vec_base(corpus, id_col, vec_col)
+    cents = _cell_table(base, n_centroids, coarse_centroids)
     if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
+        codebook = _first_by_id(corpus, id_col, vec_col, n_codes)
     coded = product_quantize(
         corpus, id_col, vec_col, dim=dim, m=m, n_codes=n_codes, codebook=codebook
     ).select("id", "codes")
-    assigned = probe_cells(base, "id", "vec", "nrm", 1).join(coded, "id")
+    cb = [list(map(float, c)) for c in codebook]
+    return _ivf_lists(base, cents, coded), cb, cents
+
+
+def _ivf_lists(base: DataFrame, cents: DataFrame, coded: DataFrame) -> DataFrame:
+    """(cell, id, codes) inverted-list rows: each vector of the persisted
+    (id, vec, nrm) ``base`` in its nearest cell, carrying its PQ codes."""
+    return (
+        nearest_cells(base, cents, "id", "vec", "nrm", max_rank=1)
+        .select("id", F.col("cent_id").alias("cell"))
+        .join(coded, "id")
+        .select("cell", "id", "codes")
+    )
+
+
+def _ivf_pq_serve(lists: DataFrame, cb: list[list[float]], m: int,
+                  cents: DataFrame, queries: DataFrame, id_col: str,
+                  vec_col: str, k: int, n_probe: int,
+                  exclude_self: bool) -> DataFrame:
+    """The one IVF-PQ search, shared by :func:`ivf_pq_topk` (artifacts
+    just built, in memory) and :func:`ivf_pq_topk_against` (artifacts
+    read off storage): queries rank the cell table with the Arrow
+    assignment (:func:`nearest_cells`), probe their ``n_probe`` nearest
+    cells, and the cogrouped ADC kernel (:func:`_cogroup_adc_scored`)
+    scores each cell's codes against its probing queries."""
+    # persist: the probe assignment and the probe rows both read it
     qbase = (
         queries.select(
             F.col(id_col).alias("q_id"), to_double(F.col(vec_col)).alias("q_vec")
@@ -2024,40 +2009,41 @@ def ivf_pq_topk(
     )
     probes = (
         qbase.select("q_id", "q_vec")
-        .join(probe_cells(qbase, "q_id", "q_vec", "q_nrm", n_probe), on="q_id")
+        .join(
+            nearest_cells(qbase, cents, "q_id", "q_vec", "q_nrm",
+                          max_rank=max(n_probe, 1))
+            .filter(F.col("crank") <= n_probe)
+            .select("q_id", F.col("cent_id").alias("cell")),
+            on="q_id",
+        )
         .select("cell", "q_id", "q_vec")
     )
     cand = _cogroup_adc_scored(
-        probes, assigned.select("cell", "id", "codes"), "cell",
-        codebook, m, d, dim, exclude_self=exclude_self,
+        probes, lists.select("cell", "id", "codes"), "cell", cb, m,
+        exclude_self=exclude_self,
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adist", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(cand, k, "adist", ascending=True)
 
 
 def _cogroup_adc_scored(probes: DataFrame, members: DataFrame, key: str,
-                        codebook: list[list[float]], m: int, d: int, dim: int,
+                        cb: list[list[float]], m: int,
                         exclude_self: bool = True) -> DataFrame:
     """ADC sibling of :func:`_cogroup_scored`: cogroup ``probes``
     (key, q_id, q_vec) with ``members`` (key, id, codes) on ``key``,
     build the block's ADC tables in numpy (:func:`_np_adc_tables` — the
     bit contract), score each q×m block by m table lookups summed
-    left-associated, and return slim (q_id, n_id, adist) rows with the
-    ``round(·, 6)`` applied JVM-side.
+    left-associated (:func:`_adc_sum`), and return slim (q_id, n_id,
+    adist) rows with the ``round(·, 6)`` applied JVM-side.
 
     Per-task memory is bounded by TILING the member side
     (:data:`_BLOCK_TILE` elements per q×tile score matrix) — a skew-hot
     key costs more time, never an executor OOM.  NULL keys are dropped
     on both sides (equi-join semantics of the form this replaces), and
     NULL/ragged q_vecs raise (:func:`_stack_checked`)."""
-    import numpy as np
     import pandas as pd
 
-    cb = [list(map(float, c)) for c in codebook]
+    dim = len(cb[0])
+    d = dim // m
     n_part = _pinned_parallelism(probes)
     probes = probes.filter(F.col(key).isNotNull()).repartition(n_part, key)
     members = members.filter(F.col(key).isNotNull()).repartition(n_part, key)
@@ -2072,23 +2058,14 @@ def _cogroup_adc_scored(probes: DataFrame, members: DataFrame, key: str,
         Q = _stack_checked(qdf["q_vec"], dim, "_cogroup_adc_scored")
         T = _np_adc_tables(Q, cb, m, d)            # q × m × n_codes
         q_ids_all = qdf["q_id"].to_numpy()
-        codes_all = np.stack([np.asarray(c, dtype=np.int64) for c in mdf["codes"]])
+        codes_all = _codes_matrix(mdf["codes"])
         ids_all = mdf["id"].to_numpy()
         tile = max(1, _BLOCK_TILE // max(nq, 1))
         outs = []
         for lo in range(0, len(mdf), tile):
-            codes = codes_all[lo:lo + tile]
-            acc = None
-            for j in range(m):                     # strict left fold
-                t = T[:, j, codes[:, j]]           # q × tile lookups
-                acc = t if acc is None else acc + t
-            qq = np.repeat(q_ids_all, len(codes))
-            nn = np.tile(ids_all[lo:lo + tile], nq)
-            araw = acc.ravel()
-            if exclude_self:
-                keep = qq != nn
-                qq, nn, araw = qq[keep], nn[keep], araw[keep]
-            outs.append(pd.DataFrame({"q_id": qq, "n_id": nn, "araw": araw}))
+            outs.append(_pair_frame(
+                q_ids_all, ids_all[lo:lo + tile], exclude_self,
+                araw=_adc_sum(T, codes_all[lo:lo + tile])))
         return pd.concat(outs, ignore_index=True)
 
     return (
@@ -2112,26 +2089,9 @@ def ivf_pq_topk_expr(
     the shape :func:`ivf_pq_topk_sql` mirrors in DuckDB."""
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"ivf_pq_topk: m ({m}) must divide dim ({dim})")
-    d = dim // m
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", norm(F.col("vec")))
-        .transform(_persisted)
-    )
-    if coarse_centroids is not None:
-        cents = corpus.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(coarse_centroids)],
-            "cent_id int, cent_vec array<double>",
-        ).withColumn("cent_nrm", norm(F.col("cent_vec")))
-    else:
-        cents = (
-            base.orderBy("id").limit(n_centroids)
-            .select(F.col("id").alias("cent_id"), F.col("vec").alias("cent_vec"),
-                    F.col("nrm").alias("cent_nrm"))
-        )
+    d = _sub_dim(dim, m, "ivf_pq_topk")
+    base = _vec_base(corpus, id_col, vec_col, nrm=norm)
+    cents = _cell_table(base, n_centroids, coarse_centroids)
 
     def probe_cells(frame, key: str, vec: str, nrm: str, max_rank: int):
         csim = F.try_divide(
@@ -2147,7 +2107,7 @@ def ivf_pq_topk_expr(
         )
 
     if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
+        codebook = _first_by_id(corpus, id_col, vec_col, n_codes)
     coded = product_quantize_expr(
         corpus, id_col, vec_col, dim=dim, m=m, n_codes=n_codes, codebook=codebook
     ).select("id", "codes")
@@ -2170,12 +2130,7 @@ def ivf_pq_topk_expr(
     cand = cand.select(
         "q_id", F.col("id").alias("n_id"), F.round(adist, 6).alias("adist")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adist", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(cand, k, "adist", ascending=True)
 
 
 def ivf_pq_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
@@ -2185,26 +2140,10 @@ def ivf_pq_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
     """DuckDB oracle for :func:`ivf_pq_topk` (default codebook; queries
     are the base rows satisfying ``query_pred``, a predicate over the
     unqualified column ``id`` — no string rewriting is applied)."""
-    d = dim // m
-
-    def dists(vec: str, j: int) -> str:
-        lo = j * d + 1
-        return (
-            f"[list_sum([({vec}[i] - c[i]) * ({vec}[i] - c[i]) "
-            f"for i in range({lo}, {lo + d})]) for c in cbs]"
-        )
-
-    code = ", ".join(
-        f"(list_position({dists('vec', j)}, list_min({dists('vec', j)})) - 1)::INT"
-        for j in range(m)
-    )
-    adist = " + ".join(
-        f"({dists('q.q_vec', j)})[codes[{j + 1}] + 1]" for j in range(m)
-    )
+    ctes, code, _, adist = _pq_sql(table, id_col, vec_col, dim, m, n_codes,
+                                   "q.q_vec")
     return f"""
-    WITH base AS (
-      SELECT {id_col} AS id, [x::DOUBLE for x in {vec_col}] AS vec FROM {table}
-    ),
+    WITH {ctes},
     cents AS (SELECT id AS cent_id, vec AS cent_vec FROM base ORDER BY id LIMIT {n_centroids}),
     cells AS (
       SELECT b.id, c.cent_id,
@@ -2213,11 +2152,6 @@ def ivf_pq_topk_sql(table: str, id_col: str, vec_col: str, dim: int,
                ORDER BY ({cosine_sql('b.vec', 'c.cent_vec')}) DESC, c.cent_id
              ) AS crank
       FROM base b CROSS JOIN cents c
-    ),
-    cb AS (
-      SELECT list(vec ORDER BY id) AS cbs FROM (
-        SELECT id, vec FROM base ORDER BY id LIMIT {n_codes}
-      )
     ),
     coded AS (SELECT id, [{code}] AS codes FROM base, cb),
     assigned AS (
@@ -2343,14 +2277,9 @@ def train_opq_rotation(
 
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"train_opq_rotation: m ({m}) must divide dim ({dim})")
-    rows = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("v"))
-        .orderBy("id").limit(sample_size).collect()
-    )
-    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    d = _sub_dim(dim, m, "train_opq_rotation")
+    X = np.asarray(_first_by_id(spread(corpus), id_col, vec_col, sample_size),
+                   dtype=np.float64)
     if X.size == 0:
         return [[1.0 if i == j else 0.0 for j in range(dim)] for i in range(dim)]
     Xc = X - X.mean(axis=0)
@@ -2358,7 +2287,6 @@ def train_opq_rotation(
     w, V = np.linalg.eigh(cov)  # ascending eigenvalues
     order = np.argsort(w)[::-1]
     w, V = w[order], V[:, order]
-    d = dim // m
     buckets: list[list[int]] = [[] for _ in range(m)]
     logs = [0.0] * m
     for i in range(dim):
@@ -2456,20 +2384,28 @@ def lsh_index(corpus: DataFrame, id_col: str = "vec_id",
         n_planes = resolve_planes(n_planes, corpus)
     if dim is None:
         dim = infer_dim(corpus, vec_col)
+    # dedupe_safe=False: the downstream bucket equi-join inserts an
+    # isnotnull(bucket) that the optimizer pushes below this projection,
+    # re-evaluating the Arrow hashing pass over the whole index corpus a
+    # second time (guide §4.4).  The index output is consumed once (or
+    # written out) — never cache-self-joined — so the nondeterministic
+    # marking is safe
+    return _lsh_rows(corpus, id_col, vec_col, n_planes, dim, dedupe_safe=False)
+
+
+def _lsh_rows(df: DataFrame, id_col: str, vec_col: str, n_planes: int,
+              dim: int, prefix: str = "", dedupe_safe: bool = True) -> DataFrame:
+    """``df`` hashed into stored-index rows (id, vec, bucket, nrm), with
+    ``prefix`` on id/vec/nrm — the shape of :func:`lsh_index`, its
+    appends and a served query batch."""
     return (
-        corpus.select(
-            F.col(id_col).alias("id"),
-            to_double(F.col(vec_col)).alias("vec"),
-            # dedupe_safe=False: the downstream bucket equi-join inserts
-            # an isnotnull(bucket) that the optimizer pushes below this
-            # projection, re-evaluating the Arrow hashing pass over the
-            # whole index corpus a second time (guide §4.4).  The index
-            # output is consumed once (or written out) — never
-            # cache-self-joined — so the nondeterministic marking is safe
+        df.select(
+            F.col(id_col).alias(prefix + "id"),
+            to_double(F.col(vec_col)).alias(prefix + "vec"),
             lsh_bucket(F.col(vec_col), n_planes, dim,
-                       dedupe_safe=False).alias("bucket"),
+                       dedupe_safe=dedupe_safe).alias("bucket"),
         )
-        .withColumn("nrm", arrow_norm(F.col("vec")))
+        .withColumn(prefix + "nrm", arrow_norm(F.col(prefix + "vec")))
     )
 
 
@@ -2517,14 +2453,7 @@ def lsh_topk_against(
             f"{n_planes!r} (for an auto-built index pass n_planes='index')")
     if dim is None:
         dim = infer_dim(queries, vec_col)
-    qt = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            to_double(F.col(vec_col)).alias("q_vec"),
-            lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
-        )
-        .withColumn("q_nrm", arrow_norm(F.col("q_vec")))
-    )
+    qt = _lsh_rows(queries, id_col, vec_col, n_planes, dim, prefix="q_")
     if multi_probe:
         qt = qt.select(
             "q_id", "q_vec", "q_nrm",
@@ -2547,12 +2476,7 @@ def lsh_topk_against(
         scored = scored.filter(F.col("score") >= score_min)
     if score_max is not None:
         scored = scored.filter(F.col("score") < score_max)
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "score", F.col("rank").cast("long").alias("rank"))
-    )
+    return _topk(scored, k)
 
 
 def stored_plane_count(index: DataFrame) -> int:
@@ -2587,14 +2511,7 @@ def lsh_index_append(index: DataFrame, batch: DataFrame,
     n_planes = stored_plane_count(index)
     if dim is None:
         dim = infer_dim(batch, vec_col)
-    new_rows = (
-        batch.select(
-            F.col(id_col).alias("id"),
-            to_double(F.col(vec_col)).alias("vec"),
-            lsh_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
-        )
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-    )
+    new_rows = _lsh_rows(batch, id_col, vec_col, n_planes, dim)
     return index.select("id", "vec", "bucket", "nrm") \
         .unionByName(new_rows.select("id", "vec", "bucket", "nrm"))
 
@@ -2654,19 +2571,23 @@ def pq_index(corpus: DataFrame, id_col: str = "vec_id",
     as two plain tables."""
     if dim is None:
         dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"pq_index: m ({m}) must divide dim ({dim})")
+    _sub_dim(dim, m, "pq_index")
     if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
+        codebook = _first_by_id(corpus, id_col, vec_col, n_codes)
     codes = product_quantize(
         corpus, id_col, vec_col, dim=dim, m=m, n_codes=n_codes,
         codebook=codebook,
     ).select("id", "codes")
-    cb_df = corpus.sparkSession.createDataFrame(
+    return codes, _codebook_df(corpus.sparkSession, codebook)
+
+
+def _codebook_df(spark, codebook: list[list[float]]) -> DataFrame:
+    """The stored codebook artifact (code_id int, cb_vec array<double>)
+    — the one schema every PQ-family build and index stream writes."""
+    return spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(codebook)],
         "code_id int, cb_vec array<double>",
     )
-    return codes, cb_df
 
 
 def stored_codebook(cb_df: DataFrame) -> list[list[float]]:
@@ -2696,6 +2617,18 @@ def stored_code_width(index: DataFrame) -> int:
     return int(row["m"])
 
 
+def _stored_pq(cb_df: DataFrame, index: DataFrame, who: str):
+    """(codebook, m) read OFF a stored PQ-family index for serving: the
+    stored width must divide the stored codebook dim."""
+    cb = stored_codebook(cb_df)
+    m = stored_code_width(index)
+    if len(cb[0]) % m != 0:
+        raise ValueError(
+            f"{who}: stored code width m={m} does not divide "
+            f"the stored codebook dim={len(cb[0])}")
+    return cb, m
+
+
 def pq_topk_against(
     index: DataFrame, cb_df: DataFrame, queries: DataFrame,
     id_col: str = "vec_id", vec_col: str = "embedding", k: int = 5,
@@ -2710,69 +2643,12 @@ def pq_topk_against(
     raw corpus vectors are never touched.  Bit-identical to
     :func:`pq_adc_topk` on the same codebook (the codes and the
     left-fold lookup sum are the same arithmetic)."""
-    import numpy as np
-    import pandas as pd
-
-    cb = stored_codebook(cb_df)
-    m = stored_code_width(index)
-    dim = len(cb[0])
-    if dim % m != 0:
-        raise ValueError(
-            f"pq_topk_against: stored code width m={m} does not divide "
-            f"the stored codebook dim={dim}")
-    d = dim // m
-    qrows = (
-        queries.select(
-            F.col(id_col).alias("q_id"), to_double(F.col(vec_col)).alias("q_vec")
-        ).limit(max_queries + 1).collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_topk_against: query side exceeds max_queries={max_queries} "
-            "— shard the query set or raise max_queries explicitly")
-    q_ids_drv = [r["q_id"] for r in qrows]
-    if any(r["q_vec"] is None for r in qrows):
-        raise ValueError("pq_topk_against: NULL query vector — filter "
-                         "NULL vecs before querying")
-    q_vecs = [[float(x) for x in r["q_vec"]] for r in qrows]
-    q_type = queries.schema[id_col].dataType.simpleString()
-    n_type = index.schema["id"].dataType.simpleString()
-    out_schema = f"q_id {q_type}, n_id {n_type}, araw double"
-
-    def score_batches(batches):
-        if not q_vecs:
-            return
-        Q = np.asarray(q_vecs, dtype=np.float64)
-        T = _np_adc_tables(Q, cb, m, d)
-        q_ids = np.asarray(q_ids_drv)
-        nq = len(q_vecs)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.stack([np.asarray(c, dtype=np.int64)
-                              for c in pdf["codes"]])
-            acc = None
-            for j in range(m):                 # strict left fold
-                t = T[:, j, codes[:, j]]
-                acc = t if acc is None else acc + t
-            qq = np.repeat(q_ids, len(pdf))
-            nn = np.tile(pdf["id"].to_numpy(), nq)
-            araw = acc.ravel()
-            if exclude_self:
-                keep = qq != nn
-                qq, nn, araw = qq[keep], nn[keep], araw[keep]
-            yield pd.DataFrame({"q_id": qq, "n_id": nn, "araw": araw})
-
-    scored = (
-        index.select("id", "codes").mapInPandas(score_batches, out_schema)
-        .select("q_id", "n_id", F.round(F.col("araw"), 6).alias("adist"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adist", F.col("rank").cast("long").alias("rank"))
-    )
+    cb, m = _stored_pq(cb_df, index, "pq_topk_against")
+    q_ids, q_vecs, q_type = _collect_queries(
+        queries, id_col, vec_col, max_queries, "pq_topk_against", note="")
+    return _adc_scan(index.select("id", "codes"), q_ids, q_vecs, q_type, cb,
+                     m, len(cb[0]) // m, k, exclude_self,
+                     lambda pdf: _codes_matrix(pdf["codes"]))
 
 
 def ivf_pq_index(corpus: DataFrame, id_col: str = "vec_id",
@@ -2787,46 +2663,10 @@ def ivf_pq_index(corpus: DataFrame, id_col: str = "vec_id",
     (the lists ideally partitioned by ``cell``) and serve query batches
     from :func:`ivf_pq_topk_against`; at scale each query batch reads
     only its probed cells' code bytes."""
-    if dim is None:
-        dim = infer_dim(corpus, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"ivf_pq_index: m ({m}) must divide dim ({dim})")
-    base = (
-        spread(corpus)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
-    spark = corpus.sparkSession
-    if coarse_centroids is not None:
-        cents = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(coarse_centroids)],
-            "cent_id int, cent_vec array<double>",
-        ).withColumn("cent_nrm", norm(F.col("cent_vec")))
-    else:
-        cents = (
-            base.orderBy("id").limit(n_centroids)
-            .select(F.col("id").cast("int").alias("cent_id"),
-                    F.col("vec").alias("cent_vec"),
-                    F.col("nrm").alias("cent_nrm"))
-        )
-    if codebook is None:
-        codebook = _default_codebook(corpus, id_col, vec_col, n_codes)
-    coded = product_quantize(
-        corpus, id_col, vec_col, dim=dim, m=m, n_codes=n_codes, codebook=codebook
-    ).select("id", "codes")
-    lists = (
-        nearest_cells(base, cents, "id", "vec", "nrm", max_rank=1)
-        .select("id", F.col("cent_id").alias("cell"))
-        .join(coded, "id")
-        .select("cell", "id", "codes")
-    )
-    cb_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(codebook)],
-        "code_id int, cb_vec array<double>",
-    )
-    cents_df = cents.select("cent_id", "cent_vec", "cent_nrm")
-    return lists, cb_df, cents_df
+    lists, cb, cents = _ivf_pq_build(
+        corpus, id_col, vec_col, dim, n_centroids, m, n_codes, codebook,
+        coarse_centroids, "ivf_pq_index")
+    return lists, _codebook_df(corpus.sparkSession, cb), cents
 
 
 def ivf_pq_topk_against(
@@ -2840,42 +2680,9 @@ def ivf_pq_topk_against(
     stored codes through the cogrouped block kernel — m and the
     codebook read OFF the artifacts, the raw corpus never touched.
     Bit-identical to :func:`ivf_pq_topk` under the same quantizers."""
-    cb = stored_codebook(cb_df)
-    m = stored_code_width(lists)
-    dim = len(cb[0])
-    if dim % m != 0:
-        raise ValueError(
-            f"ivf_pq_topk_against: stored code width m={m} does not divide "
-            f"the stored codebook dim={dim}")
-    d = dim // m
-    qbase = (
-        queries.select(
-            F.col(id_col).alias("q_id"), to_double(F.col(vec_col)).alias("q_vec")
-        )
-        .withColumn("q_nrm", arrow_norm(F.col("q_vec")))
-        .transform(_persisted)
-    )
-    probes = (
-        qbase.select("q_id", "q_vec")
-        .join(
-            nearest_cells(qbase, cents_df, "q_id", "q_vec", "q_nrm",
-                          max_rank=max(n_probe, 1))
-            .filter(F.col("crank") <= n_probe)
-            .select("q_id", F.col("cent_id").alias("cell")),
-            on="q_id",
-        )
-        .select("cell", "q_id", "q_vec")
-    )
-    cand = _cogroup_adc_scored(
-        probes, lists.select("cell", "id", "codes"), "cell",
-        cb, m, d, dim, exclude_self=exclude_self,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist").asc(), F.col("n_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "adist", F.col("rank").cast("long").alias("rank"))
-    )
+    cb, m = _stored_pq(cb_df, lists, "ivf_pq_topk_against")
+    return _ivf_pq_serve(lists, cb, m, cents_df, queries, id_col, vec_col, k,
+                         n_probe, exclude_self)
 
 
 def ivf_code_batch(batch: DataFrame, cb: list[list[float]],
@@ -2888,22 +2695,8 @@ def ivf_code_batch(batch: DataFrame, cb: list[list[float]],
     (``streaming.core.ivf_pq_index_stream``).  Both cell assignment and
     coding are pure functions of (vector, quantizers), which is what
     makes append == rebuild and replays idempotent."""
-    dim = len(cb[0])
-    base = (
-        spread(batch)
-        .select(F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec"))
-        .withColumn("nrm", arrow_norm(F.col("vec")))
-        .transform(_persisted)
-    )
-    coded = product_quantize(
-        batch, id_col, vec_col, dim=dim, m=m, n_codes=len(cb), codebook=cb,
-    ).select("id", "codes")
-    return (
-        nearest_cells(base, cents_df, "id", "vec", "nrm", max_rank=1)
-        .select("id", F.col("cent_id").alias("cell"))
-        .join(coded, "id")
-        .select("cell", "id", "codes")
-    )
+    base = _vec_base(batch, id_col, vec_col)
+    return _ivf_lists(base, cents_df, _pq_code_batch(batch, cb, m, id_col, vec_col))
 
 
 def ivf_pq_index_append(lists: DataFrame, cb_df: DataFrame,
@@ -2937,11 +2730,65 @@ def pq_index_append(index: DataFrame, cb_df: DataFrame, batch: DataFrame,
     shared retrain trigger."""
     cb = stored_codebook(cb_df)
     m = stored_code_width(index)
-    dim = len(cb[0])
-    new_codes = product_quantize(
-        batch, id_col, vec_col, dim=dim, m=m, n_codes=len(cb), codebook=cb,
-    ).select("id", "codes")
+    new_codes = _pq_code_batch(batch, cb, m, id_col, vec_col)
     return index.select("id", "codes").unionByName(new_codes)
+
+
+def _pq_code_batch(batch: DataFrame, cb: list[list[float]], m: int,
+                   id_col: str, vec_col: str) -> DataFrame:
+    """PQ-code ONE batch against a FROZEN codebook → (id, codes) — the
+    delta half of every append and index stream (coding is a pure
+    function of (vector, codebook): append == rebuild)."""
+    return product_quantize(
+        batch, id_col, vec_col, dim=len(cb[0]), m=m, n_codes=len(cb),
+        codebook=cb,
+    ).select("id", "codes")
+
+
+def _refuse_width_change(spark, codes_path: str, m: int, who: str) -> None:
+    """The index streams' m-width refusal: once codes exist at
+    ``codes_path``, a stream restarted with a different ``m`` would
+    append codes of another width and break :func:`stored_code_width`'s
+    one-row probe nondeterministically — changing m is a rebuild."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        stored_m = stored_code_width(spark.read.parquet(codes_path))
+    except AnalysisException:
+        return  # no codes yet: the first batch seeds the index
+    if stored_m != m:
+        raise ValueError(
+            f"{who}: stored index at {codes_path} has "
+            f"code width m={stored_m} but the stream was started "
+            f"with m={m} — changing m is a REBUILD, not an append")
+
+
+def _stored_or_seed(spark, path: str, seed, read):
+    """Stored-wins artifact read for the index streams: ``read`` the
+    artifact table at ``path``; if none was written yet, the first batch
+    writes ``seed()`` (an artifact DataFrame) there first, so it reads
+    back exactly what every later batch will."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        table = spark.read.parquet(path)
+    except AnalysisException:
+        seed().write.mode("overwrite").parquet(path)
+        table = spark.read.parquet(path)
+    return read(table)
+
+
+def _stream_codebook(path: str, frame: DataFrame, id_col: str, vec_col: str,
+                     n_codes: int, codebook: list[list[float]] | None):
+    """The PQ-family index streams' codebook: the stored artifact at
+    ``path``; the first batch seeds it from ``codebook=`` or, like
+    :func:`pq_index`, from ``frame``'s first ``n_codes`` vectors by id."""
+    spark = frame.sparkSession
+    return _stored_or_seed(
+        spark, path,
+        lambda: _codebook_df(spark, codebook if codebook is not None
+                             else _first_by_id(frame, id_col, vec_col, n_codes)),
+        stored_codebook)
 
 
 def rotation_matrix(perm: list[int], signs: list[float]) -> list[list[float]]:
@@ -2996,11 +2843,16 @@ def opq_index(corpus: DataFrame, id_col: str = "vec_id",
     codes, cb_df = pq_index(rot, id_col, vec_col, dim=dim, m=m,
                             n_codes=n_codes, codebook=codebook)
     codes = codes.transform(_persisted)
-    rot_df = corpus.sparkSession.createDataFrame(
+    return codes, cb_df, _rotation_df(corpus.sparkSession, rotation)
+
+
+def _rotation_df(spark, rotation: list[list[float]]) -> DataFrame:
+    """The stored rotation artifact (row_id int, r_vec array<double>) of
+    :func:`opq_index` and the OPQ index stream."""
+    return spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(rotation)],
         "row_id int, r_vec array<double>",
     )
-    return codes, cb_df, rot_df
 
 
 def stored_rotation(rot_df: DataFrame) -> list[list[float]]:

@@ -59,6 +59,19 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def _default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: half of physical memory, capped at
+    16g (1g floor).  The JVM's resident size grows well past its heap
+    (off-heap buffers, metaspace, Arrow), so a fixed 16g heap on a 15 GB
+    host gets the process OOM-killed; ``SPARK_GRAFT_DRIVER_MEM``
+    overrides."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{max(1024, min(16 * 1024, phys // 2 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "pigpen_spark",
     master: str | None = None,
@@ -78,7 +91,8 @@ def get_spark(
     # local mode: the single JVM is driver AND executors — Spark's 1g
     # default heap GC-thrashes with 32 concurrent tasks; must be set
     # before JVM start, hence here and not in DEFAULT_CONF runtime sets.
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    conf.setdefault("spark.driver.memory",
+                    os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else min(int(cpus) * 2, 64)
     )

@@ -216,12 +216,21 @@ def stream_static_join(stream: DataFrame, static: DataFrame, on: str,
     return joined
 
 
+def _start(writer, checkpoint: str, available_now: bool):
+    """Start a streaming sink (a ``foreachBatch`` handler or a file
+    format) with its progress under ``checkpoint``; ``available_now``
+    processes what has arrived and stops instead of running until
+    stopped."""
+    writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def write_stream_parquet(df: DataFrame, path: str, checkpoint: str, available_now: bool = False):
     """Streaming sink with exactly-once file output."""
-    w = df.writeStream.format("parquet").option("path", path).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.format("parquet").option("path", path),
+                  checkpoint, available_now)
 
 
 def foreach_batch_many(
@@ -242,10 +251,7 @@ def foreach_batch_many(
         finally:
             batch_df.unpersist()
 
-    w = df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(df.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def curate_stream(df: DataFrame, id_col: str, content_col: str, ts_col: str,
@@ -386,10 +392,7 @@ def dedup_stream_incremental(
         finally:
             batch_df.unpersist()
 
-    w = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def ann_index_stream(
@@ -439,11 +442,7 @@ def ann_index_stream(
         rows = lsh_index(batch_df, id_col, vec_col, n_planes=np_, dim=dim)
         rows.write.mode("overwrite").parquet(f"{index_path}/batch={batch_id}")
 
-    w = stream.writeStream.foreachBatch(handle) \
-        .option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def pq_index_stream(
@@ -478,53 +477,21 @@ def pq_index_stream(
     artifacts.
 
     Returns the started StreamingQuery."""
-    from pyspark.errors import AnalysisException
-
-    from pigpen_spark.functions.similarity import (
-        _default_codebook, product_quantize, stored_code_width,
-        stored_codebook,
-    )
+    from pigpen_spark.functions import similarity as S
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # empty micro-batches are normal under processing-time triggers;
         # seeding a codebook from one would collect zero rows and wedge
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        try:
-            # stored-index-wins doctrine extends to m: once codes exist,
-            # a restart with a different m would silently append codes of
-            # another width and break pq_topk_against's single
-            # stored_code_width probe nondeterministically — refuse loud.
-            stored_m = stored_code_width(spark.read.parquet(codes_path))
-            if stored_m != m:
-                raise ValueError(
-                    f"pq_index_stream: stored index at {codes_path} has "
-                    f"code width m={stored_m} but the stream was started "
-                    f"with m={m} — changing m is a REBUILD, not an append")
-        except AnalysisException:
-            pass  # no codes yet: first batch seeds the index
-        try:
-            cb = stored_codebook(spark.read.parquet(codebook_path))
-        except AnalysisException:
-            cb = ([list(map(float, c)) for c in codebook]
-                  if codebook is not None
-                  else _default_codebook(batch_df, id_col, vec_col, n_codes))
-            spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cb)],
-                "code_id int, cb_vec array<double>",
-            ).write.mode("overwrite").parquet(codebook_path)
-        codes = product_quantize(
-            batch_df, id_col, vec_col, dim=len(cb[0]), m=m,
-            n_codes=len(cb), codebook=cb,
-        ).select("id", "codes")
-        codes.write.mode("overwrite").parquet(f"{codes_path}/batch={batch_id}")
+        S._refuse_width_change(batch_df.sparkSession, codes_path, m,
+                               "pq_index_stream")
+        cb = S._stream_codebook(codebook_path, batch_df, id_col, vec_col,
+                                n_codes, codebook)
+        S._pq_code_batch(batch_df, cb, m, id_col, vec_col) \
+            .write.mode("overwrite").parquet(f"{codes_path}/batch={batch_id}")
 
-    w = stream.writeStream.foreachBatch(handle) \
-        .option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def ivf_pq_index_stream(
@@ -562,74 +529,30 @@ def ivf_pq_index_stream(
     when).
 
     Returns the started StreamingQuery."""
-    from pyspark.errors import AnalysisException
-
-    from pigpen_spark.functions.similarity import (
-        _default_codebook, arrow_norm, ivf_code_batch, norm,
-        stored_code_width, stored_codebook, to_double,
-    )
+    from pigpen_spark import cache as _cache
+    from pigpen_spark.functions import similarity as S
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        try:
-            stored_m = stored_code_width(spark.read.parquet(lists_path))
-            if stored_m != m:
-                raise ValueError(
-                    f"ivf_pq_index_stream: stored index at {lists_path} has "
-                    f"code width m={stored_m} but the stream was started "
-                    f"with m={m} — changing m is a REBUILD, not an append")
-        except AnalysisException:
-            pass  # no lists yet: first batch seeds the index
-        try:
-            cb = stored_codebook(spark.read.parquet(codebook_path))
-        except AnalysisException:
-            cb = ([list(map(float, c)) for c in codebook]
-                  if codebook is not None
-                  else _default_codebook(batch_df, id_col, vec_col, n_codes))
-            spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cb)],
-                "code_id int, cb_vec array<double>",
-            ).write.mode("overwrite").parquet(codebook_path)
-        try:
-            cents_df = spark.read.parquet(centroids_path)
-        except AnalysisException:
-            if coarse_centroids is not None:
-                cents_df = spark.createDataFrame(
-                    [(i, [float(x) for x in c])
-                     for i, c in enumerate(coarse_centroids)],
-                    "cent_id int, cent_vec array<double>",
-                ).withColumn("cent_nrm", norm(F.col("cent_vec")))
-            else:
-                # ivf_pq_index's default: first n_centroids by id (cell
-                # labels carry those corpus ids)
-                cents_df = (
-                    batch_df
-                    .select(F.col(id_col).alias("id"),
-                            to_double(F.col(vec_col)).alias("vec"))
-                    .orderBy("id").limit(n_centroids)
-                    .select(F.col("id").cast("int").alias("cent_id"),
-                            F.col("vec").alias("cent_vec"),
-                            arrow_norm(F.col("vec")).alias("cent_nrm"))
-                )
-            cents_df.write.mode("overwrite").parquet(centroids_path)
-            cents_df = spark.read.parquet(centroids_path)
-        # scoped cache release: ivf_code_batch persists its batch base;
-        # a long-running stream must not accumulate one cache per
+        S._refuse_width_change(spark, lists_path, m, "ivf_pq_index_stream")
+        cb = S._stream_codebook(codebook_path, batch_df, id_col, vec_col,
+                                n_codes, codebook)
+        # scoped cache release: the batch's persisted (id, vec, nrm) base
+        # (read by the centroid seed and by ivf_code_batch) dies with the
+        # batch — a long-running stream must not accumulate one cache per
         # micro-batch
-        from pigpen_spark import cache as _cache
         with _cache.scope():
-            new_rows = ivf_code_batch(batch_df, cb, cents_df, m,
-                                      id_col, vec_col)
-            new_rows.write.mode("overwrite").parquet(
-                f"{lists_path}/batch={batch_id}")
+            cents_df = S._stored_or_seed(
+                spark, centroids_path,
+                lambda: S._cell_table(S._vec_base(batch_df, id_col, vec_col),
+                                      n_centroids, coarse_centroids),
+                lambda table: table)
+            S.ivf_code_batch(batch_df, cb, cents_df, m, id_col, vec_col) \
+                .write.mode("overwrite").parquet(f"{lists_path}/batch={batch_id}")
 
-    w = stream.writeStream.foreachBatch(handle) \
-        .option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def opq_index_stream(
@@ -661,64 +584,28 @@ def opq_index_stream(
     Retraining the rotation re-codes every vector: rebuild + restart.
 
     Returns the started StreamingQuery."""
-    from pyspark.errors import AnalysisException
-
-    from pigpen_spark.functions.similarity import (
-        _default_codebook, infer_dim, product_quantize, rotate_vectors,
-        stored_code_width, stored_codebook, stored_rotation,
-        train_opq_rotation,
-    )
+    from pigpen_spark import cache as _cache
+    from pigpen_spark.functions import similarity as S
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        try:
-            stored_m = stored_code_width(spark.read.parquet(codes_path))
-            if stored_m != m:
-                raise ValueError(
-                    f"opq_index_stream: stored index at {codes_path} has "
-                    f"code width m={stored_m} but the stream was started "
-                    f"with m={m} — changing m is a REBUILD, not an append")
-        except AnalysisException:
-            pass  # no codes yet: first batch seeds the index
-        try:
-            R = stored_rotation(spark.read.parquet(rotation_path))
-        except AnalysisException:
-            R = ([[float(x) for x in row] for row in rotation]
-                 if rotation is not None
-                 else train_opq_rotation(
-                     batch_df, id_col, vec_col,
-                     dim=infer_dim(batch_df, vec_col), m=m))
-            spark.createDataFrame(
-                [(i, row) for i, row in enumerate(R)],
-                "row_id int, r_vec array<double>",
-            ).write.mode("overwrite").parquet(rotation_path)
-        from pigpen_spark import cache as _cache
-        with _cache.scope():
-            rot = rotate_vectors(batch_df, id_col, vec_col, R)
-            try:
-                cb = stored_codebook(spark.read.parquet(codebook_path))
-            except AnalysisException:
-                cb = ([list(map(float, c)) for c in codebook]
-                      if codebook is not None
-                      else _default_codebook(rot, id_col, vec_col, n_codes))
-                spark.createDataFrame(
-                    [(i, c) for i, c in enumerate(cb)],
-                    "code_id int, cb_vec array<double>",
-                ).write.mode("overwrite").parquet(codebook_path)
-            codes = product_quantize(
-                rot, id_col, vec_col, dim=len(cb[0]), m=m,
-                n_codes=len(cb), codebook=cb,
-            ).select("id", "codes")
-            codes.write.mode("overwrite").parquet(
-                f"{codes_path}/batch={batch_id}")
+        S._refuse_width_change(spark, codes_path, m, "opq_index_stream")
+        def seed_rotation():
+            R = rotation if rotation is not None else S.train_opq_rotation(
+                batch_df, id_col, vec_col, dim=S.infer_dim(batch_df, vec_col), m=m)
+            return S._rotation_df(spark, R)
 
-    w = stream.writeStream.foreachBatch(handle) \
-        .option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+        R = S._stored_or_seed(spark, rotation_path, seed_rotation, S.stored_rotation)
+        with _cache.scope():
+            rot = S.rotate_vectors(batch_df, id_col, vec_col, R)
+            cb = S._stream_codebook(codebook_path, rot, id_col, vec_col,
+                                    n_codes, codebook)
+            S._pq_code_batch(rot, cb, m, id_col, vec_col) \
+                .write.mode("overwrite").parquet(f"{codes_path}/batch={batch_id}")
+
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def _parquet_versions(base_path: str) -> list[int]:
@@ -807,11 +694,7 @@ def take_budget_stream(
         for v in vs:   # best-effort prune of superseded ledger versions
             shutil.rmtree(f"{totals_path}/v{v}", ignore_errors=True)
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def rollup_stream(
@@ -857,10 +740,7 @@ def rollup_stream(
         for v in vs:   # best-effort prune of superseded versions
             shutil.rmtree(f"{rollup_path}/v{v}", ignore_errors=True)
 
-    w = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def drift_monitor_stream(
@@ -914,10 +794,7 @@ def drift_monitor_stream(
                 "batch_id long, n_old long, n_new long, l1_ppm long, linf_ppm long",
             ).write.mode("append").parquet(alarms_path)
 
-    w = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def boilerplate_stream(
@@ -995,10 +872,7 @@ def boilerplate_stream(
         # batch's rows on checkpoint replay
         out.write.mode("errorifexists").parquet(str(sink_dir))
 
-    w = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def stream_group_accumulate(
@@ -1094,11 +968,7 @@ def kmv_stream(
         for v in vs:
             shutil.rmtree(f"{sketch_path}/v{v}", ignore_errors=True)
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def publish_bloom_filter(sketch: DataFrame, filter_path: str,
@@ -1157,11 +1027,7 @@ def decontaminate_stream(
         out.withColumn("filter_version", F.lit(vs[-1])) \
             .write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def linkage_stream(
@@ -1203,11 +1069,7 @@ def linkage_stream(
         out.withColumn("roster_version", F.lit(vs[-1])) \
             .write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def conversation_stream(
@@ -1284,11 +1146,7 @@ def conversation_stream(
             for v in prior:
                 shutil.rmtree(f"{open_path}/v{v}", ignore_errors=True)
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def scd2_stream(
@@ -1342,11 +1200,8 @@ def scd2_stream(
         for v in vs:
             shutil.rmtree(f"{dim_path}/v{v}", ignore_errors=True)
 
-    w = change_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(change_stream.writeStream.foreachBatch(handle),
+                  checkpoint, available_now)
 
 
 def session_stats_stream(
@@ -1428,11 +1283,7 @@ def session_stats_stream(
             for v in prior_open:
                 shutil.rmtree(f"{open_path}/v{v}", ignore_errors=True)
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)
 
 
 def manifest_stream(
@@ -1542,8 +1393,4 @@ def tokenize_stream(
         encode(batch_df).write.mode("overwrite") \
             .parquet(f"{out_path}/batch={batch_id}")
 
-    w = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _start(stream.writeStream.foreachBatch(handle), checkpoint, available_now)

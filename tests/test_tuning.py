@@ -88,3 +88,41 @@ def test_python_workers_keep_zip_directories(spark):
     assert any(r.imported for r in rows)
     # tasks ran after an earlier task in the same worker process
     assert len({r.pid for r in rows}) < len(rows)
+
+
+def test_function_library_submodules_load_lazily():
+    # importing one function module must not drag in its siblings: every
+    # Python worker that unpickles a multimodal UDF pays for what the
+    # package __init__ imports.  A fresh interpreter, so modules the test
+    # session already loaded cannot hide an eager import.
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys, pigpen_spark.functions.multimodal\n"
+        "print(','.join(m for m in ('similarity', 'dedup', 'text')\n"
+        "      if 'pigpen_spark.functions.' + m in sys.modules))\n"
+        "from pigpen_spark.functions import similarity\n"
+        "import pigpen_spark.functions as fns\n"
+        "print(fns.dedup.__name__, similarity.__name__)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", probe], capture_output=True,
+                         text=True, check=True).stdout.splitlines()
+    assert out[0] == ""
+    assert out[1] == ("pigpen_spark.functions.dedup "
+                      "pigpen_spark.functions.similarity")
+
+
+def test_default_driver_memory_is_half_of_host_capped(monkeypatch):
+    import os
+
+    from pigpen_spark import session
+
+    def host(gib):
+        monkeypatch.setattr(os, "sysconf", lambda k: 4096 if k == "SC_PAGE_SIZE"
+                            else gib * 2**30 // 4096)
+        return session._default_driver_memory()
+
+    assert host(15) == "7680m"     # half of a 15 GiB host
+    assert host(64) == "16384m"    # capped at 16g
+    assert host(1) == "1024m"      # never below Spark's 1g default

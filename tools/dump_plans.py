@@ -26,6 +26,12 @@ def summarize(plan: str) -> str:
         "Exchange": plan.count("Exchange"),
         "TakeOrdered": plan.count("TakeOrderedAndProject"),
         "MapInPandas": plan.count("MapInPandas"),
+        # Python/Arrow crossings: pandas_udf columns, grouped and
+        # cogrouped pandas kernels.  Counted as printed, so a node under
+        # a cached relation counts once per scan of that cache
+        "ArrowEvalPython": plan.count("ArrowEvalPython"),
+        "FlatMapGroupsInPandas": plan.count("FlatMapGroupsInPandas"),
+        "FlatMapCoGroupsInPandas": plan.count("FlatMapCoGroupsInPandas"),
         "PushedFilters": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
         "InMemoryRelation(persist)": plan.count("InMemoryTableScan"),
     }
